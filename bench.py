@@ -290,7 +290,7 @@ def _hot_band_leg(spark, sf_dir: str) -> dict:
     from pyspark.sql import functions as F
 
     from text_dedup_spark.kernels.minhash_kernel import MinHashKernel
-    from text_dedup_spark.operators.minhash import minhash_dedup, minhash_fingerprint
+    from text_dedup_spark.operators.minhash import fingerprint_bands, minhash_dedup
 
     base = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         F.col("doc_id").alias("__INDEX__"), "text"
@@ -309,7 +309,9 @@ def _hot_band_leg(spark, sf_dir: str) -> dict:
     docs.count()  # materialize: both legs time the dedup, not the union
     kernel = MinHashKernel(num_perm=64, ngram_size=2, min_length=5, threshold=0.5)
     # untimed warm pass (see docstring): worker imports + codegen
-    minhash_fingerprint(docs, kernel).count()
+    warm = fingerprint_bands(docs, kernel)
+    warm.count()
+    warm.unpersist()
 
     walls: dict[str, float] = {}
     dups: dict[str, int] = {}

@@ -427,21 +427,21 @@ class TestUnionFind:
 
 class TestXXH3Vectorized:
     def test_matches_scalar_all_lengths(self):
-        """xxh3_64_batch must be byte-identical to the scalar spec impl for
-        every length class and across the chunking boundary."""
-        import numpy as np
+        """The native batch hash must be byte-identical to the scalar spec
+        impl for every length class, the >240-byte striped long path (inside
+        the first 1 KiB block and across several) included, at seeds that take the default
+        secret (0), a custom one (42) and the top bit (2**63 + 5)."""
+        from text_dedup_spark.kernels import minhash_native
 
-        from text_dedup_spark.kernels.xxh3_vec import xxh3_64_batch
-
+        if not minhash_native.available():
+            pytest.skip(f"native kernel unavailable: {minhash_native.load_error()}")
         rng = np.random.RandomState(123)
-        strings = []
-        for length in list(range(0, 242)) + [300, 999]:
-            strings.append(
-                bytes(rng.randint(0, 256, size=length, dtype=np.int64).astype(np.uint8).tolist())
-            )
-        # pad beyond one chunk to exercise tiling
-        strings = strings * 20  # ~4880 strings > _CHUNK
-        for seed in (0, 42):
-            got = xxh3_64_batch(strings, seed)
+        strings = [
+            rng.randint(0, 256, size=length).astype(np.uint8).tobytes()
+            for length in list(range(0, 242)) + [300, 999, 5000]
+        ]
+        buf, offsets = minhash_native.pack(strings)
+        for seed in (0, 42, 2**63 + 5):
+            got = minhash_native.xxh3_64_batch(buf, offsets, seed)
             exp = np.array([_xxh3_64_py(s, seed) for s in strings], dtype=np.uint64)
             assert np.array_equal(got, exp), f"seed={seed}"

@@ -228,6 +228,20 @@ class TestSaltedBandEdges:
         cplan = cedges._jdf.queryExecution().executedPlan().toString()
         assert "Window" not in cplan, cplan
 
+    def test_minhash_fingerprint_evaluates_bands_udf_once(self, spark, pages_df):
+        """posexplode infers ``isnotnull AND size > 0`` on the band array;
+        pushed below the projection that computes it, that filter plans a
+        second ArrowEvalPython node. The persisted raw UDF output keeps it
+        to one."""
+        from text_dedup_spark.operators.minhash import minhash_fingerprint
+
+        # a seed no other test uses: a cache another test already filled
+        # would print its adaptive plan twice (final and initial)
+        kernel = MinHashKernel(num_perm=64, ngram_size=2, min_length=5, threshold=0.5, seed=7)
+        exploded = minhash_fingerprint(pages_df, kernel)
+        plan = exploded._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython") == 1, plan
+
     def test_contraction_collapses_exact_duplicates(self, spark, pages_df):
         """Every byte-identical text group must contract to ONE exploded
         representative; members reconnect purely via contraction edges."""

@@ -1,4 +1,5 @@
-"""Pure-Python/numpy kernel library (no Spark imports).
+"""Kernel library: pure Python/numpy plus compile-on-first-use C (no Spark
+imports).
 
 These functions pin the exact reference semantics (text-dedup) and serve
 two roles: (1) closure state shipped into vectorized pandas/Arrow UDFs,

@@ -1,9 +1,11 @@
 """Base hash functions, byte-identical to the reference.
 
 Reference: ``src/text_dedup/utils/hashfunc.py`` (md5/sha1/sha256 digests at
-:13-61, ``sha1_hash`` at :63-93, ``xxh3_hash`` at :96-105). The xxh3 family
-delegates to :mod:`text_dedup_spark.kernels.xxh3` (real ``xxhash`` when
-importable, spec-faithful pure Python otherwise).
+:13-61, ``sha1_hash`` at :63-93, ``xxh3_hash`` at :96-105). The scalar xxh3
+family delegates to :mod:`text_dedup_spark.kernels.xxh3` (real ``xxhash``
+when importable, spec-faithful pure Python otherwise); ``xxh3_64_batch``
+hashes a whole batch in the native kernel (``minhash_native.c``) and falls
+back to that scalar spec when no compiler is present.
 """
 
 from __future__ import annotations
@@ -13,6 +15,9 @@ import struct
 from hashlib import md5, sha1, sha256
 from typing import Literal
 
+import numpy as np
+
+from text_dedup_spark.kernels import minhash_native
 from text_dedup_spark.kernels.xxh3 import xxh3_64_intdigest, xxh3_128_intdigest
 
 
@@ -84,4 +89,15 @@ def xxh3_hash(data: bytes, seed: int = 0, bits: int = 32) -> int:
         return xxh3_128_intdigest(data, seed)
     return int.from_bytes(
         xxh3_128_intdigest(data, 0).to_bytes(16, "big")[: bits // 8], byteorder="big"
+    )
+
+
+def xxh3_64_batch(items: list[bytes], seed: int = 0) -> np.ndarray:
+    """uint64 ``xxh3_64_intdigest(item, seed)`` per item, in input order:
+    one native call over the packed batch, or the scalar spec per item when
+    the native kernel does not load."""
+    if minhash_native.available():
+        return minhash_native.xxh3_64_batch(*minhash_native.pack(items), seed)
+    return np.fromiter(
+        (xxh3_64_intdigest(x, seed) for x in items), dtype=np.uint64, count=len(items)
     )

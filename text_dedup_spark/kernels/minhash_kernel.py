@@ -1,11 +1,22 @@
-"""MinHash signature kernel — numpy, byte-identical to the reference.
+"""MinHash signature kernel — byte-identical to the reference.
 
 Reference: ``src/text_dedup/config/algorithms/minhash.py`` — hash-config
 table (:101-108), ``optimal_param`` (:18-76), permutation generation
 (:154-171), embed (:200-236). The reference embeds one doc per call
-(``minhash.py:42`` batch_size=1); here the same math is vectorized across a
-whole Arrow batch (signatures are bit-for-bit identical because per-doc
-minima are independent).
+(``minhash.py:42`` batch_size=1); here a whole Arrow batch is embedded at
+once (signatures are bit-for-bit identical because per-doc minima are
+independent).
+
+Two implementations of the same math:
+- native (``minhash_native.c``) for the xxh3 configs with a 32-bit base
+  hash (hash_bits 64/32): ``band_keys_batch`` hands C one buffer of
+  space-joined tokens per batch, and C hashes each n-gram in place, then
+  permutes, takes minima and mixes band keys — no per-shingle Python
+  object; ``embed_batch_bandhash`` does the same from pre-built shingles;
+- the spec path — per-doc ``signature`` (scalar hash, definitional
+  ``%``) and the numpy ``_signature_from_hashes`` over batch hashes —
+  which serves every other config, is the fallback when no compiler is
+  present, and is the oracle the native path is tested against.
 
 Parity pins (SURVEY.md §7.9):
 - base hash uses ``min(hash_bits, 32)`` bits (so 64-bit config hashes
@@ -24,8 +35,14 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from text_dedup_spark.kernels.hashfunc import sha1_hash, xxh3_hash
-from text_dedup_spark.kernels.tokenization import shingles
+from text_dedup_spark.kernels import minhash_native
+from text_dedup_spark.kernels.hashfunc import sha1_hash, xxh3_64_batch, xxh3_hash
+from text_dedup_spark.kernels.tokenization import (
+    joined_tokens,
+    shingle_bytes,
+    shingles,
+    tokenize,
+)
 
 # Multiplier for the 64-bit band-key polynomial mix: 2**64/phi (the
 # splitmix64 increment — a public-domain constant). Odd, so multiplication
@@ -146,14 +163,11 @@ class MinHashKernel:
         return self.embed_batch_shingles([self.shingles(c) for c in contents])
 
     def _hash_shingle_batch(self, flat: list[bytes]) -> np.ndarray:
-        """Base-hash a whole Arrow batch of shingles at once. xxh3 with a
-        32-bit base (the hash_bits 64/32 configs) rides the vectorized
-        numpy XXH3 (byte-identical to the scalar spec impl, ~6x faster);
-        other configs fall back to the scalar kernels."""
-        bits = min(self.hash_bits, 32)
-        if self.hash_func_name == "xxh3" and bits == 32:
-            from text_dedup_spark.kernels.xxh3_vec import xxh3_64_batch
-
+        """Base-hash a whole Arrow batch of shingles at once: xxh3 with a
+        32-bit base (the hash_bits 64/32 configs) is one batch call
+        (native, or the scalar spec without a compiler); other configs
+        hash per shingle."""
+        if self.hash_func_name == "xxh3" and min(self.hash_bits, 32) == 32:
             return (xxh3_64_batch(flat, self.seed) & np.uint64(0xFFFFFFFF)).astype(
                 self.dtype
             )
@@ -190,11 +204,6 @@ class MinHashKernel:
         hv &= self.dtype(self.max_hash)
         return np.minimum(hv.min(axis=0), masks)
 
-    def _signature_from_shingles(self, shingle_set: set[bytes], masks: np.ndarray) -> np.ndarray:
-        return self._signature_from_hashes(
-            self._hash_shingle_batch(list(shingle_set)), masks
-        )
-
     def _batch_signatures(self, shingle_sets: list[set[bytes]], masks: np.ndarray):
         """Hash ALL shingles of the batch in one vectorized pass, then
         per-doc cache-tiled permute+min."""
@@ -230,6 +239,25 @@ class MinHashKernel:
             for sig in self._batch_signatures(shingle_sets, masks)
         ]
 
+    def _native_args(self) -> dict | None:
+        """Keyword arguments of the native band-key entry points, or None
+        when this config (or this host) takes the spec path."""
+        if not (
+            self.hash_func_name == "xxh3"
+            and self.hash_bits in (32, 64)
+            and minhash_native.available()
+        ):
+            return None
+        n_used = self.bands * self.rows
+        return dict(
+            seed=self.seed,
+            hash_bits=self.hash_bits,
+            a=self.a[:n_used].astype(np.uint64),
+            b=self.b[:n_used].astype(np.uint64),
+            bands=self.bands,
+            rows=self.rows,
+        )
+
     def embed_batch_bandhash(self, shingle_sets: list[set[bytes]]) -> list[np.ndarray]:
         """Per-doc ``bands``-long int64 array of 64-bit band keys — the scale
         wire format. A band's key is the polynomial mix (mod 2**64) of its
@@ -242,10 +270,20 @@ class MinHashKernel:
         rate without it). vs the byte blobs: ~4x fewer bytes through Arrow,
         the fingerprint cache, and the band shuffle, and fixed-width int64
         group keys instead of binary comparators."""
+        if not shingle_sets:
+            return []
+        native = self._native_args()
+        if native is not None:
+            buf, item_offsets = minhash_native.pack(
+                [s for shingle_set in shingle_sets for s in shingle_set]
+            )
+            doc_items = np.zeros(len(shingle_sets) + 1, dtype=np.int64)
+            np.cumsum([len(s) for s in shingle_sets], out=doc_items[1:])
+            return list(
+                minhash_native.minhash_bands_items(buf, item_offsets, doc_items, **native)
+            )
         masks = np.full(shape=self.num_perm, dtype=self.dtype, fill_value=self.max_hash)
         sigs = list(self._batch_signatures(shingle_sets, masks))
-        if not sigs:
-            return []
         n_used = self.bands * self.rows
         m = (
             np.stack(sigs)[:, :n_used]
@@ -255,10 +293,29 @@ class MinHashKernel:
         h = np.zeros((len(sigs), self.bands), dtype=np.uint64)
         for k in range(self.rows):
             h = h * BAND_MIX_MULT + m[:, :, k]
-        out = h.view(np.int64)
-        return [out[i] for i in range(out.shape[0])]
+        return list(h.view(np.int64))
 
-    def token_count(self, content: str) -> int:
-        from text_dedup_spark.kernels.tokenization import tokenize
-
-        return len(tokenize(content))
+    def band_keys_batch(self, contents) -> list[np.ndarray | None]:
+        """The fingerprint UDF's body: per raw text (None reads as ""), its
+        ``embed_batch_bandhash`` band keys, or None when it has fewer than
+        ``min_length`` tokens (reference ``minhash.py:23-28``). Natively,
+        Python only tokenizes — one space-joined token buffer per doc, one
+        concatenated buffer per batch — and C forms, hashes and permutes
+        the n-grams."""
+        texts = [c if c is not None else "" for c in contents]
+        native = self._native_args()
+        if native is not None:
+            buf, offsets = minhash_native.pack([joined_tokens(t) for t in texts])
+            keys, valid = minhash_native.minhash_bands(
+                buf, offsets, self.ngram_size, self.min_length, **native
+            )
+            return [k if ok else None for k, ok in zip(keys, valid, strict=True)]
+        token_lists = [tokenize(t) for t in texts]
+        keep = [i for i, t in enumerate(token_lists) if len(t) >= self.min_length]
+        embedded = self.embed_batch_bandhash(
+            [shingle_bytes(token_lists[i], self.ngram_size, self.min_length) for i in keep]
+        )
+        out: list[np.ndarray | None] = [None] * len(texts)
+        for i, keys in zip(keep, embedded, strict=True):
+            out[i] = keys
+        return out

@@ -21,7 +21,7 @@ from itertools import permutations as iter_permutations
 
 import numpy as np
 
-from text_dedup_spark.kernels.hashfunc import xxh3_hash
+from text_dedup_spark.kernels.hashfunc import xxh3_64_batch, xxh3_hash
 
 
 @dataclass(frozen=True)
@@ -183,15 +183,8 @@ class SimHashKernel:
 
             return compute([md5_hash(t, self.f) for t in tokens], self.f)
         if self.f == 64:
-            # vectorized batch hash (byte-identical to scalar xxh3) + vote
-            from text_dedup_spark.kernels.xxh3_vec import xxh3_64_batch
-
-            hashes = xxh3_64_batch(list(tokens), self.seed)
-            bits = np.unpackbits(
-                np.frombuffer(hashes.astype(">u8").tobytes(), dtype=np.uint8)
-            ).reshape(len(tokens), 64).astype(np.int64)
-            sig_bits = (np.sum(2 * bits - 1, axis=0) > 0).astype(np.uint8)
-            return int.from_bytes(np.packbits(sig_bits).tobytes(), "big")
+            # one batch hash call (native; byte-identical to scalar xxh3)
+            return compute(xxh3_64_batch(list(tokens), self.seed).tolist(), self.f)
         return compute([unsigned_hash(t, self.seed, self.f) for t in tokens], self.f)
 
     def embed(self, content: str) -> tuple[bytes, list[tuple[bytes, bytes]]]:
@@ -214,16 +207,13 @@ class SimHashKernel:
     def fingerprint_batch(self, contents: list[str]) -> list[int]:
         """Per-doc fingerprints for a whole Arrow batch, bit-identical to
         ``fingerprint`` (pinned in tests). f=64 xxh3 fast path: ONE
-        vectorized hash call over every doc's shingles (the per-doc
-        ``xxh3_64_batch`` calls spent more time in per-call tile setup than
-        hashing — measured 2.7x) + per-doc bit votes as one
-        ``np.add.reduceat`` segment sum."""
+        ``xxh3_64_batch`` call over every doc's shingles (native over one
+        packed buffer) + per-doc bit votes over row views of one byte
+        matrix."""
         if self.hash_func_name != "xxh3" or self.f != 64:
             # same NULL guard as the fast path below: a None text must
             # fingerprint as "" (all-zero sig), not raise inside tokenize
             return [self.fingerprint(c if c is not None else "") for c in contents]
-        from text_dedup_spark.kernels.xxh3_vec import xxh3_64_batch
-
         sets = [self.shingles(c if c is not None else "") for c in contents]
         sigs = [0] * len(sets)
         idx = [i for i, s in enumerate(sets) if s]

@@ -25,6 +25,16 @@ def tokenize(content: str) -> list[str]:
     return [t for t in NON_ALPHA.split(content.lower()) if t]
 
 
+def joined_tokens(content: str) -> bytes:
+    """utf-8 of the tokens joined by single spaces, i.e.
+    ``" ".join(tokenize(content)).encode()`` without the intermediate list.
+    Tokens never contain a space (``\\W`` matches it, and no multi-byte
+    utf-8 sequence holds byte 0x20), so every n-gram shingle of the doc is
+    a contiguous byte range of this buffer — the input form of the native
+    MinHash kernel (minhash_native.c)."""
+    return " ".join(filter(None, NON_ALPHA.split(content.lower()))).encode("utf-8")
+
+
 def ngrams(sequence: list[str], n: int, min_length: int = 5) -> Iterator[tuple[str, ...]]:
     """Sliding n-grams with the reference's two edge cases:
 

@@ -32,9 +32,8 @@ from dataclasses import dataclass
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, LongType
+from pyspark.sql.types import ArrayType, LongType
 
-from text_dedup_spark.kernels.jaccard import jaccard_similarity
 from text_dedup_spark.kernels.minhash_kernel import MinHashKernel
 from text_dedup_spark.kernels.tokenization import shingles
 from text_dedup_spark.operators.connected_components import connected_components
@@ -51,34 +50,14 @@ class MinHashDedupResult:
 def _bands_udf(kernel: MinHashKernel):
     """Arrow-batched fingerprint: None for docs failing the min_length
     filter (reference ``minhash.py:23-28``), else an int64 array of 64-bit
-    band keys (``MinHashKernel.embed_batch_bandhash`` — the polynomial mix
-    of each band's signature values; equal bands -> equal keys, distinct
+    band keys (``MinHashKernel.band_keys_batch`` — the polynomial mix of
+    each band's signature values; equal bands -> equal keys, distinct
     bands collide at ~2**-64). ~4x fewer bytes per doc through Arrow and
     the fingerprint cache than the byteswapped signature blob."""
 
     @F.pandas_udf(ArrayType(LongType()))
     def bands(texts: pd.Series) -> pd.Series:
-        from text_dedup_spark.kernels.tokenization import shingle_bytes, tokenize
-
-        shingle_sets: list[set[bytes] | None] = []
-        for t in texts:
-            tokens = tokenize(t if t is not None else "")
-            if len(tokens) < kernel.min_length:
-                shingle_sets.append(None)
-            else:
-                # zip-based shingle construction, output-identical to the
-                # ngrams iterator path (and no per-gram .lower(): tokens
-                # are already lowered by tokenize — see kernels.
-                # tokenization.shingle_bytes/shingles)
-                shingle_sets.append(
-                    shingle_bytes(tokens, kernel.ngram_size, kernel.min_length)
-                )
-        out: list = [None] * len(shingle_sets)
-        keep_idx = [i for i, s in enumerate(shingle_sets) if s is not None]
-        embedded = kernel.embed_batch_bandhash([shingle_sets[i] for i in keep_idx])
-        for i, b in zip(keep_idx, embedded, strict=True):
-            out[i] = b
-        return pd.Series(out)
+        return pd.Series(kernel.band_keys_batch(texts))
 
     return bands
 
@@ -90,27 +69,6 @@ def _explode_bands(filtered: DataFrame, kernel: MinHashKernel) -> DataFrame:
         F.col(INDEX_COL),
         F.posexplode(F.col("__BANDS__")).alias("__band_idx__", "__band_val__"),
     )
-
-
-def jaccard_pair_udf(ngram_size: int, min_length: int):
-    """Pairwise shingle-set Jaccard (reference ``minhash.py:108-145`` /
-    ``utils/jaccard.py``), Arrow-batched. Test-oracle / compatibility path:
-    the FP-verify operators use ``gram_set_udf`` + ``jaccard_ge_expr``
-    instead (one tokenize per doc, JVM set ops per pair)."""
-
-    @F.pandas_udf(DoubleType())
-    def jacc(t1: pd.Series, t2: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                jaccard_similarity(
-                    shingles(a or "", ngram_size, min_length),
-                    shingles(b or "", ngram_size, min_length),
-                )
-                for a, b in zip(t1, t2, strict=True)
-            ]
-        )
-
-    return jacc
 
 
 def gram_set_udf(ngram_size: int, min_length: int):
@@ -146,11 +104,36 @@ def jaccard_ge_expr(g1, g2, threshold: float):
     return (uni > F.lit(0)) & cond
 
 
+def fingerprint_bands(df: DataFrame, kernel: MinHashKernel, text_col: str = "text") -> DataFrame:
+    """The persisted fingerprint cache: (__INDEX__, __BANDS__) with one row
+    per input doc, __BANDS__ null for docs below ``min_length``.
+
+    SLIM — (id, band-key array) only, ~9B/band — the exact shape of the
+    fingerprint checkpoint table you'd persist at cluster scale; wide
+    columns rejoin by id at assignment. The persist sits BELOW every filter
+    on __BANDS__ deliberately: a filter on the UDF output (the explicit
+    isNotNull, or the ``isnotnull AND size > 0`` Catalyst infers for a
+    posexplode) is pushed below the projection that computes the UDF, and
+    the plan then holds two ArrowEvalPython nodes — one to evaluate the
+    filter, one to rematerialize the column — doubling the most expensive
+    stage of the pipeline. Caching the raw UDF output keeps one evaluation;
+    the filter is a trivial scan predicate on the cache."""
+    return (
+        df.select(F.col(INDEX_COL), F.col(text_col))
+        .withColumn("__BANDS__", _bands_udf(kernel)(F.col(text_col)))
+        .select(INDEX_COL, "__BANDS__")
+        .persist()
+    )
+
+
 def minhash_fingerprint(df: DataFrame, kernel: MinHashKernel, text_col: str = "text") -> DataFrame:
     """filter(min_length) + embed + band split -> (__INDEX__, __band_idx__,
-    __band_val__). Equivalent of reference P1+F1..F7 (minhash.py:23-44)."""
-    with_bands = df.withColumn("__BANDS__", _bands_udf(kernel)(F.col(text_col)))
-    return _explode_bands(with_bands.where(F.col("__BANDS__").isNotNull()), kernel)
+    __band_val__). Equivalent of reference P1+F1..F7 (minhash.py:23-44).
+    Reads a ``fingerprint_bands`` cache, so the bands UDF runs once per
+    doc; ``spark.catalog.clearCache()`` (or ``fingerprint_bands`` directly,
+    for a handle to unpersist) releases it."""
+    bands = fingerprint_bands(df, kernel, text_col)
+    return _explode_bands(bands.where(F.col("__BANDS__").isNotNull()), kernel)
 
 
 def lsh_star_edges(exploded: DataFrame) -> DataFrame:
@@ -566,24 +549,7 @@ def minhash_dedup(
     if repartition_input:
         docs = docs.repartition(repartition_input, F.col(INDEX_COL))
 
-    # The fingerprint cache is SLIM — (id, band-key array) only, ~9B/band —
-    # the exact shape of the fingerprint checkpoint table you'd persist at
-    # cluster scale. Caching the full input rows alongside (the previous
-    # shape) tripled the cache bytes and made every band-phase scan drag the
-    # text column through memory. Wide columns rejoin by id at assignment.
-    # The persist sits BELOW the isNotNull filter deliberately: with the
-    # filter inside the cached plan, Catalyst pushes it under the
-    # repartition exchange, which splits the Python UDF into two
-    # ArrowEvalPython nodes (one to evaluate the filter pre-shuffle, one to
-    # rematerialize the column post-shuffle) — doubling the single most
-    # expensive stage of the pipeline. Caching the raw UDF output keeps one
-    # evaluation; the filter is a trivial scan predicate on the cache.
-    with_bands = (
-        docs.select(F.col(INDEX_COL), F.col(text_col))
-        .withColumn("__BANDS__", _bands_udf(kernel)(F.col(text_col)))
-        .select(INDEX_COL, "__BANDS__")
-        .persist()
-    )
+    with_bands = fingerprint_bands(docs, kernel, text_col)
     filtered = with_bands.where(F.col("__BANDS__").isNotNull())
 
     if band_edges_mode == "salted":

@@ -6,8 +6,9 @@ Usage:
     spark-submit --py-files dist/text_dedup_spark.zip \
         --master spark://... run_job.py --config configs/minhash.toml
 
-The archive contains the ``text_dedup_spark`` package only (pure Python +
-numpy kernels; no native extensions, so one zip works on every executor).
+The archive contains the ``text_dedup_spark`` package only: Python sources
+plus the C kernel sources, which each executor compiles on first use (no
+prebuilt binaries, so one zip works on every executor).
 """
 
 from __future__ import annotations
@@ -23,10 +24,14 @@ def build(out: Path) -> None:
     out.parent.mkdir(parents=True, exist_ok=True)
     pkg = REPO / "text_dedup_spark"
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
-        # *.c: the suffix-array SA-IS kernel ships as SOURCE and compiles
-        # on first use per executor (ctypes loader, sa_native.py); without
-        # it executors silently fall back to the numpy kernel — correct
-        # but ~8x slower on suffix dedup
+        # the top-level package has no __init__.py (a namespace package);
+        # zipimport finds one only through an explicit directory entry
+        zf.write(pkg, pkg.relative_to(REPO))
+        # *.c: the C kernels (suffix array, MinHash fingerprint) ship as
+        # SOURCE and compile on first use per executor (kernels/native.py);
+        # without them executors silently fall back — correct, but suffix
+        # dedup runs ~8x slower and MinHash hashes every shingle in
+        # pure-Python xxh3
         for src in sorted(pkg.rglob("*.py")) + sorted(pkg.rglob("*.c")):
             zf.write(src, src.relative_to(REPO))
     names = zipfile.ZipFile(out).namelist()
