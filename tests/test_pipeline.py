@@ -110,6 +110,69 @@ class TestPipeline:
         assert not assigned_stage["resumed"]
 
 
+    def test_minhash_label_checkpoint_and_resume(self, spark, tmp_path):
+        """With ``index_column`` no ``ids`` copy of the input is made and the
+        ``assigned`` checkpoint holds only the labels; the outputs equal a
+        run without ``run_dir`` and a second run resumed from checkpoints."""
+        import pickle
+
+        import pandas as pd
+
+        pages = make_web_pages(n_docs=200, seed=3).pages[["url", "text", "lang"]]
+        # docs under min_length: no labels, so the id rejoin must drop them
+        short = pd.DataFrame({"url": ["s0", "s1"], "text": ["too short", ""], "lang": ["en", "en"]})
+        pages = pd.concat([pages, short], ignore_index=True)
+        pages.insert(0, "doc_id", range(1000, 1000 + len(pages)))
+        src = tmp_path / "pages"
+        spark.createDataFrame(pages).write.parquet(str(src))
+        algo = (
+            'algorithm_name = "minhash"\nindex_column = "doc_id"\nnum_perm = 64\n'
+            "ngram_size = 2\nthreshold = 0.5\nmin_length = 5"
+        )
+        run_dir = tmp_path / "ckpts"
+
+        def run(name: str, checkpointed: bool):
+            out = tmp_path / name
+            cfgp = write_config(
+                tmp_path,
+                str(src),
+                algo,
+                str(out),
+                extra_output="save_clusters = true",
+                spark_section=f'[spark]\nrun_dir = "{run_dir}"' if checkpointed else "",
+            )
+            summary = run_pipeline(load_config(cfgp), spark=spark)
+            data = spark.read.parquet(str(out / "data"))
+            rows = sorted(data.collect(), key=lambda r: r["__INDEX__"])
+            clusters = sorted(map(tuple, spark.read.parquet(str(out / "clusters")).collect()))
+            with open(out / "clusters.pickle", "rb") as f:
+                mapping = pickle.load(f)
+            outputs = (data.columns, rows, clusters, mapping, summary["rows_after"])
+            return summary, outputs
+
+        _, plain = run("plain", checkpointed=False)
+        s1, first = run("ckpt", checkpointed=True)
+        # same config, so the same config hash: every stage resumes
+        s2, resumed = run("ckpt", checkpointed=True)
+        assert first == plain and resumed == plain
+        columns, rows, clusters, mapping, rows_after = plain
+        assert clusters and mapping == dict(clusters)
+        assert rows_after == len(rows)
+        assert not {1200, 1201} & {r["__INDEX__"] for r in rows}
+
+        assert [st["stage"] for st in s1["stages"]] == ["assigned"]
+        assert not s1["stages"][0]["resumed"] and s2["stages"][0]["resumed"]
+        assert not (run_dir / "ids").exists()
+        labels = spark.read.parquet(str(run_dir / "assigned" / "data"))
+        assert labels.columns == ["__INDEX__", "__CLUSTER__", "__duplicate__"]
+        manifest = json.loads((run_dir / "assigned" / "manifest.json").read_text())
+        lineage = spark.read.parquet(str(run_dir / "assigned" / "lineage"))
+        assert lineage.columns == ["partition_id", "rows"]
+        assert manifest["rows"] == sum(r["rows"] for r in lineage.collect()) == labels.count()
+        assert labels.where("__INDEX__ >= 1200").count() == 0
+        assert "partition_skew" in manifest
+
+
 class TestSplitSlicing:
     def test_apply_split(self, spark):
         from text_dedup_spark.pipeline import _apply_split

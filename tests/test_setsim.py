@@ -2,6 +2,7 @@
 and the observable hot-gram df cap (scale guard for stopword-heavy corpora)."""
 
 import itertools
+import random
 
 import pytest
 from pyspark.sql import Observation
@@ -27,6 +28,22 @@ def hot_corpus():
     return docs
 
 
+@pytest.fixture
+def graded_corpus():
+    # one 40-token base text with a different number of tokens replaced per
+    # doc: pair Jaccards spread over (0, 1], so the prefix bounds are tested
+    # against pairs close to each threshold
+    rng = random.Random(7)
+    base = [f"t{j}" for j in range(40)]
+    docs = []
+    for i in range(24):
+        toks = list(base)
+        for j in rng.sample(range(40), (i * 37) % 23):
+            toks[j] = f"u{i}_{j}"
+        docs.append((i, " ".join(toks)))
+    return docs
+
+
 def _naive_pairs(docs, threshold):
     out = set()
     for (ia, ta), (ib, tb) in itertools.combinations(docs, 2):
@@ -45,14 +62,31 @@ def _df(spark, docs):
     )
 
 
-def test_lossless_matches_naive(spark, hot_corpus):
-    expected = _naive_pairs(hot_corpus, 0.5)
+# pins the prefix lengths' ceil arithmetic (asymmetric probing prefix,
+# positional filter) across the threshold range, 1.0 included
+THRESHOLDS = [0.3, 0.5, 0.6, 0.7, 0.75, 0.8, 0.9, 1.0]
+
+
+@pytest.mark.parametrize("threshold", THRESHOLDS)
+def test_lossless_matches_naive(spark, hot_corpus, threshold):
+    expected = _naive_pairs(hot_corpus, threshold)
     got = {
         (r["a_id"], r["b_id"])
-        for r in jaccard_pairs_prefix(_df(spark, hot_corpus), threshold=0.5).collect()
+        for r in jaccard_pairs_prefix(_df(spark, hot_corpus), threshold=threshold).collect()
     }
     assert got == expected
     assert len(expected) >= 10  # planted pairs actually exercised
+
+
+@pytest.mark.parametrize("threshold", THRESHOLDS)
+def test_lossless_matches_naive_graded(spark, graded_corpus, threshold):
+    expected = _naive_pairs(graded_corpus, threshold)
+    got = {
+        (r["a_id"], r["b_id"])
+        for r in jaccard_pairs_prefix(_df(spark, graded_corpus), threshold=threshold).collect()
+    }
+    assert got == expected
+    assert expected
 
 
 def test_gram_df_cap_observable_subset(spark, hot_corpus):

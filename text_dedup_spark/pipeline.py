@@ -2,11 +2,32 @@
 Spark job (the counterpart of the reference's ``python -m text_dedup.minhash``
 lifecycle, SURVEY.md §3.1, re-expressed as checkpointed DataFrame stages).
 
-Stages (each checkpointed to ``spark.run_dir`` when set, resumable by config
-hash): ids -> clusters -> assigned -> final. Outputs: ``{output_dir}/data``
-parquet (internal columns dropped per keep-flags, reference io.py:79-94) and
-``{output_dir}/clusters`` parquet when ``save_clusters`` (reference
-clusters.pickle equivalent; S5).
+Stages, each checkpointed to ``spark.run_dir`` when set and resumed when its
+config hash matches (``plans/checkpoints.StageRunner``):
+
+- ``ids``: the input rows with ``__INDEX__``. Checkpointed only when the ids
+  depend on partition layout: the parity load-order ``row_number`` and the
+  scale profile's ``monotonically_increasing_id``. With
+  ``algorithm.index_column`` the ids are a cast of an input column, so
+  ``docs`` is derived from the input lazily and nothing is copied.
+- ``assigned``: the dedup labels. MinHash, SimHash and embedding checkpoint
+  ``(__INDEX__, __CLUSTER__, __duplicate__)``, bloom_filter
+  ``(__INDEX__, __duplicate__)``; the output rows are ``docs`` joined to
+  them by id. suffix_array checkpoints full rows, since its output is the
+  rewritten text.
+
+Without ``run_dir`` nothing is checkpointed and the outputs are written
+from the lazy dedup plan (scale-profile layout-dependent ids are frozen
+with ``localCheckpoint`` instead).
+
+Outputs: ``{output_dir}/data`` parquet (internal columns dropped per
+keep-flags, reference io.py:79-94) and, when ``save_clusters``,
+``{output_dir}/clusters`` parquet read from the labels plus the reference's
+``clusters.pickle`` (S5). ``rows_after`` is observed on the data write.
+
+A resumed run assumes the input is unchanged: the config hash covers the
+config, not the input data, and a resumed ``assigned`` stage is joined to
+the input as it is read now (or to the ``ids`` checkpoint).
 """
 
 from __future__ import annotations
@@ -15,11 +36,13 @@ import time
 from dataclasses import asdict
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from text_dedup_spark.config import Config
 from text_dedup_spark.operators.ids import CLUSTER_COL, DUPLICATE_COL, INDEX_COL
+
+CLUSTERS_PICKLE_MAX = 5_000_000  # largest clusters.pickle mapping written
 
 
 def read_input(spark: SparkSession, config: Config) -> DataFrame:
@@ -189,13 +212,31 @@ def run_pipeline(config: Config, spark: SparkSession | None = None) -> dict:
 
         runner = StageRunner(spark, config.spark.run_dir)
 
-    def stage(name: str, cfg, build):
+    def stage(name: str, build):
         if runner is None:
             return build()
-        return runner.stage(name, cfg, build)
+        return runner.stage(name, {"cfg": cfg_dict, "stage": name}, build)
+
+    def assign_stage(build, label_cols: list[str]) -> tuple[DataFrame, DataFrame]:
+        """The ``assigned`` stage as (rows, labels). ``build`` gives every
+        doc row that passes the algorithm's filters with its label columns
+        added. Without ``run_dir`` both are that lazy frame. With it, only
+        ``label_cols`` are checkpointed (the text is already in ``docs``),
+        and the rows are rejoined by id: an inner join, since the labels
+        hold exactly the docs ``build`` kept."""
+        if runner is None:
+            assigned = build()
+            return assigned, assigned
+        labels = stage("assigned", lambda: build().select(*label_cols))
+        return docs.join(labels, INDEX_COL), labels
 
     cfg_dict = asdict(config)
-    docs = stage("ids", {"cfg": cfg_dict, "stage": "ids"}, lambda: _with_ids(read_input(spark, config), config))
+    if algo.index_column:
+        # ids are a cast of an input column: nothing to freeze, so the
+        # input is not copied into an ids checkpoint
+        docs = _with_ids(read_input(spark, config), config)
+    else:
+        docs = stage("ids", lambda: _with_ids(read_input(spark, config), config))
     if algo.profile == "scale" and runner is None and not algo.index_column:
         # "scale" ids come from monotonically_increasing_id, which is
         # partition-layout dependent: without the ids-stage checkpoint
@@ -239,13 +280,13 @@ def run_pipeline(config: Config, spark: SparkSession | None = None) -> dict:
             )
             return res.docs
 
-        assigned = stage("assigned", {"cfg": cfg_dict, "stage": "assigned"}, build_assigned)
+        assigned, labels = assign_stage(build_assigned, [INDEX_COL, CLUSTER_COL, DUPLICATE_COL])
         final = (
             assigned
             if config.output.skip_filtering
             else assigned.where(F.col(CLUSTER_COL) == F.col(INDEX_COL))
         )
-        clusters = assigned.where(F.col(DUPLICATE_COL)).select(
+        clusters = labels.where(F.col(DUPLICATE_COL)).select(
             F.col(INDEX_COL).alias("id"), F.col(CLUSTER_COL).alias("cluster")
         )
     elif algo.algorithm_name == "simhash":
@@ -276,13 +317,13 @@ def run_pipeline(config: Config, spark: SparkSession | None = None) -> dict:
                 contraction="join" if algo.profile == "scale" else "window",
             ).docs
 
-        assigned = stage("assigned", {"cfg": cfg_dict, "stage": "assigned"}, build_assigned)
+        assigned, labels = assign_stage(build_assigned, [INDEX_COL, CLUSTER_COL, DUPLICATE_COL])
         final = (
             assigned
             if config.output.skip_filtering
             else assigned.where(~F.col(DUPLICATE_COL))
         )
-        clusters = assigned.where(F.col(CLUSTER_COL) != F.col(INDEX_COL)).select(
+        clusters = labels.where(F.col(CLUSTER_COL) != F.col(INDEX_COL)).select(
             F.col(INDEX_COL).alias("id"), F.col(CLUSTER_COL).alias("cluster")
         )
     elif algo.algorithm_name == "embedding":
@@ -316,13 +357,13 @@ def run_pipeline(config: Config, spark: SparkSession | None = None) -> dict:
             )
             return docs.join(labels, INDEX_COL)
 
-        assigned = stage("assigned", {"cfg": cfg_dict, "stage": "assigned"}, build_assigned)
+        assigned, labels = assign_stage(build_assigned, [INDEX_COL, CLUSTER_COL, DUPLICATE_COL])
         final = (
             assigned
             if config.output.skip_filtering
             else assigned.where(F.col(CLUSTER_COL) == F.col(INDEX_COL))
         )
-        clusters = assigned.where(F.col(DUPLICATE_COL)).select(
+        clusters = labels.where(F.col(DUPLICATE_COL)).select(
             F.col(INDEX_COL).alias("id"), F.col(CLUSTER_COL).alias("cluster")
         )
     elif algo.algorithm_name == "bloom_filter":
@@ -331,7 +372,10 @@ def run_pipeline(config: Config, spark: SparkSession | None = None) -> dict:
         def build_flags():
             return exact_dedup(docs, text_col=algo.text_column, skip_filtering=True).docs
 
-        flagged = stage("assigned", {"cfg": cfg_dict, "stage": "assigned"}, build_flags)
+        flagged, _ = assign_stage(build_flags, [INDEX_COL, DUPLICATE_COL])
+        # exact_dedup keeps the input's column order; the id rejoin puts
+        # the id first
+        flagged = flagged.select(*docs.columns, DUPLICATE_COL)
         final = (
             flagged if config.output.skip_filtering else flagged.where(~F.col(DUPLICATE_COL))
         )
@@ -347,7 +391,8 @@ def run_pipeline(config: Config, spark: SparkSession | None = None) -> dict:
                 max_group_bytes=max_group_bytes,
             ).docs
 
-        rewritten = stage("assigned", {"cfg": cfg_dict, "stage": "assigned"}, build_rewritten)
+        # full rows: the stage output is the rewritten text
+        rewritten = stage("assigned", build_rewritten)
         final = rewritten.where(F.length(F.col(algo.text_column)) > 0)
     else:
         raise ValueError(f"unknown algorithm: {algo.algorithm_name}")
@@ -364,25 +409,29 @@ def run_pipeline(config: Config, spark: SparkSession | None = None) -> dict:
         drop_cols.append(DUPLICATE_COL)
     out = Path(config.output.output_dir)
     final_out = final.drop(*drop_cols)
-    final_out.write.mode("overwrite").parquet(str(out / "data"))
+    # rows_after is counted during the data write: no second pass over it
+    written = Observation("rows_after")
+    final_out.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    ).parquet(str(out / "data"))
     if config.output.output_table:
         final_out.write.mode("overwrite").saveAsTable(config.output.output_table)
     if config.output.save_clusters and clusters is not None:
         clusters.write.mode("overwrite").parquet(str(out / "clusters"))
         # small-scale compatibility export of the reference's clusters.pickle
-        # (io.py:76-77) — dict[id, cluster]; only when it fits on the driver
-        n_clusters = clusters.count()
-        if n_clusters <= 5_000_000:
+        # (io.py:76-77) — dict[id, cluster]; only when it fits on the driver.
+        # ONE action gates and collects, as in connected_components
+        pdf = spark.read.parquet(str(out / "clusters")).limit(CLUSTERS_PICKLE_MAX + 1).toPandas()
+        if len(pdf) <= CLUSTERS_PICKLE_MAX:
             import pickle
 
-            mapping = {r["id"]: r["cluster"] for r in clusters.collect()}
+            mapping = dict(zip(pdf["id"].tolist(), pdf["cluster"].tolist()))
             with open(out / "clusters.pickle", "wb") as f:
                 pickle.dump(mapping, f, protocol=pickle.HIGHEST_PROTOCOL)
 
-    n_after = spark.read.parquet(str(out / "data")).count()
     summary = {
         "algorithm": algo.algorithm_name,
-        "rows_after": n_after,
+        "rows_after": written.get["rows"],
         "wall_sec": round(time.time() - t0, 3),
         "output_dir": str(out),
         "stages": runner.manifest_log if runner else [],
