@@ -528,7 +528,7 @@ def q_simhash_dedup_verified_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     which regroups by old cluster id) — __duplicate__ intentionally NOT
     updated. Short docs carry the all-zero fingerprint AND empty shingle
     sets, so their pairs verify via the empty-union J=1.0 convention
-    (kernels.jaccard) — replayed identically in SQL."""
+    (tests/oracles.jaccard_similarity) — replayed identically in SQL."""
     from text_dedup_spark.kernels.simhash_kernel import SimHashKernel
     from text_dedup_spark.operators.ids import CLUSTER_COL, DUPLICATE_COL
     from text_dedup_spark.operators.simhash import simhash_dedup

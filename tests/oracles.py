@@ -8,11 +8,57 @@ from __future__ import annotations
 
 from collections import defaultdict
 
-from text_dedup_spark.kernels.jaccard import jaccard_similarity
 from text_dedup_spark.kernels.minhash_kernel import MinHashKernel
 from text_dedup_spark.kernels.simhash_kernel import SimHashKernel, hamming_distance
 from text_dedup_spark.kernels.tokenization import tokenize
-from text_dedup_spark.kernels.union_find import UnionFind
+
+
+def jaccard_similarity(doc1: set, doc2: set) -> float:
+    """|A∩B| / |A∪B|; empty union -> 1.0 (reference edge case,
+    ``src/text_dedup/utils/jaccard.py:9-30``)."""
+    if (union_size := len(doc1 | doc2)) == 0:
+        return 1.0
+    return len(doc1 & doc2) / union_size
+
+
+class UnionFind:
+    """Driver-local union-find, the oracle for distributed CC: reference
+    ``src/text_dedup/utils/union_find.py:6-81`` semantics (path
+    compression + union by rank)."""
+
+    def __init__(self) -> None:
+        self.parent: dict[int, int] = {}
+        self.rank: dict[int, int] = {}
+
+    def find(self, x: int) -> int:
+        if x not in self.parent:
+            self.parent[x] = x
+            self.rank[x] = 0
+            return x
+        root = x
+        while self.parent[root] != root:
+            root = self.parent[root]
+        while self.parent[x] != root:
+            self.parent[x], x = root, self.parent[x]
+        return root
+
+    def union(self, x: int, y: int) -> None:
+        px, py = self.find(x), self.find(y)
+        if px == py:
+            return
+        if self.rank[px] < self.rank[py]:
+            px, py = py, px
+        self.parent[py] = px
+        if self.rank[px] == self.rank[py]:
+            self.rank[px] += 1
+
+    def get_clusters(self) -> dict[int, int]:
+        """id -> min-id of its component (normalized labels, SURVEY.md §7.3)."""
+        roots: dict[int, int] = {}
+        for x in list(self.parent):
+            r = self.find(x)
+            roots[r] = min(roots.get(r, r), x)
+        return {x: roots[self.find(x)] for x in self.parent}
 
 
 def minhash_oracle(

@@ -67,20 +67,6 @@ class TestReferenceTomlParse:
         with pytest.raises(ValueError, match="num_prm"):
             load_config(str(p))
 
-    def test_fingerprint_contraction_validated(self, tmp_path):
-        p = tmp_path / "fc.toml"
-        p.write_text(
-            "[algorithm]\nalgorithm_name='minhash'\n"
-            "fingerprint_contraction='maybe'\n"
-        )
-        with pytest.raises(ValueError, match="fingerprint_contraction"):
-            load_config(str(p))
-        p.write_text(
-            "[algorithm]\nalgorithm_name='minhash'\n"
-            "fingerprint_contraction='never'\n"
-        )
-        assert load_config(str(p)).algorithm.fingerprint_contraction == "never"
-
 
 class TestBenchmarkConfigsRun:
     @pytest.mark.parametrize(

@@ -2,8 +2,8 @@
 
 import numpy as np
 
+from tests.oracles import UnionFind
 from text_dedup_spark.functions.embedding_dedup import embedding_cosine_dedup
-from text_dedup_spark.kernels.union_find import UnionFind
 
 
 def make_vectors(n=120, dim=16, seed=9):

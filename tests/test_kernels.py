@@ -10,6 +10,7 @@ goldens from ``config/algorithms/simhash.py`` doctests, interval goldens from
 import numpy as np
 import pytest
 
+from tests.oracles import UnionFind, jaccard_similarity
 from text_dedup_spark.kernels.hashfunc import (
     md5_digest,
     sha1_hash,
@@ -22,7 +23,6 @@ from text_dedup_spark.kernels.intervals import (
     restore,
     restore_and_merge,
 )
-from text_dedup_spark.kernels.jaccard import jaccard_similarity
 from text_dedup_spark.kernels.minhash_kernel import MinHashKernel, optimal_param
 from text_dedup_spark.kernels.simhash_kernel import (
     SimHashKernel,
@@ -30,7 +30,6 @@ from text_dedup_spark.kernels.simhash_kernel import (
     hamming_distance,
 )
 from text_dedup_spark.kernels.tokenization import ngrams, shingles, tokenize
-from text_dedup_spark.kernels.union_find import UnionFind
 from text_dedup_spark.kernels.xxh3 import _xxh3_64_py, _xxh3_128_py
 
 M64 = (1 << 64) - 1

@@ -3,8 +3,8 @@
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from tests.oracles import jaccard_similarity
 from text_dedup_spark.kernels.intervals import clean_up, merge_intervals
-from text_dedup_spark.kernels.jaccard import jaccard_similarity
 from text_dedup_spark.kernels.minhash_kernel import MinHashKernel
 from text_dedup_spark.kernels.simhash_kernel import SimHashKernel, hamming_distance
 from text_dedup_spark.kernels.tokenization import ngrams, tokenize

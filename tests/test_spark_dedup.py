@@ -4,10 +4,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tests.oracles import exact_oracle, minhash_oracle, simhash_oracle
+from tests.oracles import UnionFind, exact_oracle, minhash_oracle, simhash_oracle
 from text_dedup_spark.kernels.minhash_kernel import MinHashKernel
 from text_dedup_spark.kernels.simhash_kernel import SimHashKernel
-from text_dedup_spark.kernels.union_find import UnionFind
 from text_dedup_spark.operators.connected_components import connected_components
 from text_dedup_spark.operators.exact import exact_dedup
 from text_dedup_spark.operators.ids import CLUSTER_COL, DUPLICATE_COL, INDEX_COL, assign_ids
@@ -177,29 +176,65 @@ class TestMinHashDedup:
 
 
 class TestSaltedBandEdges:
-    """band_edges_mode="salted" (the scale profile's star-edge form:
-    identical-fingerprint contraction + salted two-phase groupBy-min +
-    AQE-skew join-back) must be output-identical to the window form — the
-    same oracle that pins the default path pins it."""
+    """The scale profile's star-edge form (band_edges_mode="salted":
+    identical-fingerprint contraction when the distinct-ratio probe says it
+    pays + salted groupBy-min + AQE-skew join-back, and the join-form
+    FP-verify contraction) must be label-identical to the window form and
+    to the same oracle that pins the default path."""
+
+    @staticmethod
+    def distinct_fp_ratio(df, kernel):
+        """The salted path's contraction probe, as minhash_dedup runs it."""
+        from text_dedup_spark.operators.minhash import fingerprint_bands
+
+        bands = fingerprint_bands(df, kernel)
+        probe = bands.where(F.col("__BANDS__").isNotNull()).select(
+            F.count(F.lit(1)).alias("n"),
+            F.approx_count_distinct(F.xxhash64("__BANDS__"), rsd=0.02).alias("nd"),
+        ).first()
+        bands.unpersist()
+        return probe["nd"] / probe["n"]
 
     @pytest.mark.parametrize("check_fp", [False, True])
     def test_matches_oracle(self, spark, corpus, pages_df, check_fp):
+        """Both probe outcomes: ``pages_df`` is mostly unique (the probe
+        skips contraction); the flood adds 100 byte-identical copies of
+        each of three pages (the probe contracts)."""
         kernel = MinHashKernel(num_perm=64, ngram_size=2, min_length=5, threshold=0.5)
         texts = list(corpus.pages["text"])
-        expected_parents, expected_kept = minhash_oracle(
-            texts, kernel, check_false_positive=check_fp
-        )
-        res = minhash_dedup(
-            pages_df, kernel, check_false_positive=check_fp, band_edges_mode="salted"
-        )
-        got_kept = sorted(r[INDEX_COL] for r in res.kept.select(INDEX_COL).collect())
-        assert got_kept == expected_kept
-        got = {
-            r[INDEX_COL]: r[CLUSTER_COL]
-            for r in res.docs.select(INDEX_COL, CLUSTER_COL).collect()
-        }
-        for idx, c in got.items():
-            assert expected_parents.get(idx, idx) == c, f"doc {idx}"
+        n = len(texts)
+        copies = [
+            (n + 100 * k + j, texts[src])
+            for k, src in enumerate((3, 17, 42))
+            for j in range(100)
+        ]
+        flood_df = pages_df.select(INDEX_COL, "text").unionByName(
+            spark.createDataFrame(copies, f"{INDEX_COL} long, text string")
+        ).cache()
+        flood_texts = texts + [t for _, t in copies]
+        try:
+            assert self.distinct_fp_ratio(pages_df, kernel) >= 0.85
+            assert self.distinct_fp_ratio(flood_df, kernel) < 0.85
+            for df, corpus_texts in ((pages_df, texts), (flood_df, flood_texts)):
+                expected_parents, expected_kept = minhash_oracle(
+                    corpus_texts, kernel, check_false_positive=check_fp
+                )
+                labels = {}
+                for mode in ("window", "salted"):
+                    res = minhash_dedup(
+                        df, kernel, check_false_positive=check_fp, band_edges_mode=mode
+                    )
+                    got_kept = sorted(r[INDEX_COL] for r in res.kept.select(INDEX_COL).collect())
+                    assert got_kept == expected_kept, mode
+                    labels[mode] = {
+                        r[INDEX_COL]: r[CLUSTER_COL]
+                        for r in res.docs.select(INDEX_COL, CLUSTER_COL).collect()
+                    }
+                    for idx, c in labels[mode].items():
+                        assert expected_parents.get(idx, idx) == c, f"{mode} doc {idx}"
+                assert labels["window"] == labels["salted"]
+        finally:
+            flood_df.unpersist()
 
     def test_salted_plan_has_no_window(self, spark, pages_df):
         """The whole point of the salted form: no per-band-key window sort
@@ -268,56 +303,6 @@ class TestSaltedBandEdges:
         kernel = MinHashKernel(num_perm=16, ngram_size=2, min_length=5, threshold=0.5)
         with pytest.raises(ValueError, match="band_edges_mode"):
             minhash_dedup(pages_df, kernel, band_edges_mode="saltedd")
-        with pytest.raises(ValueError, match="fingerprint_contraction"):
-            minhash_dedup(pages_df, kernel, fingerprint_contraction="maybe")
-
-    @pytest.mark.parametrize("gate", ["auto", "always", "never"])
-    def test_contraction_gate_output_invariant(self, spark, corpus, pages_df, gate):
-        """The fingerprint-contraction auto-gate is PHYSICAL planning only:
-        all three settings must yield the reference clustering (contraction
-        preserves the transitive closure; skipping it routes members
-        through the salted groupBy directly)."""
-        kernel = MinHashKernel(num_perm=64, ngram_size=2, min_length=5, threshold=0.5)
-        expected_parents, expected_kept = minhash_oracle(
-            list(corpus.pages["text"]), kernel, check_false_positive=False
-        )
-        res = minhash_dedup(
-            pages_df, kernel, band_edges_mode="salted", fingerprint_contraction=gate
-        )
-        got_kept = sorted(r[INDEX_COL] for r in res.kept.select(INDEX_COL).collect())
-        assert got_kept == expected_kept
-        got = {
-            r[INDEX_COL]: r[CLUSTER_COL]
-            for r in res.docs.select(INDEX_COL, CLUSTER_COL).collect()
-        }
-        for idx, c in got.items():
-            assert expected_parents.get(idx, idx) == c, f"doc {idx}"
-
-    def test_explicit_salt_phase_same_edges(self, spark, pages_df):
-        """salt_buckets > 0 (the explicit two-phase form for non-algebraic
-        aggregates) must produce the same edge SET as the partial-agg
-        default — min of per-salt minima is the band minimum."""
-        from text_dedup_spark.operators.minhash import (
-            lsh_star_edges_salted,
-            minhash_fingerprint,
-        )
-
-        kernel = MinHashKernel(num_perm=64, ngram_size=2, min_length=5, threshold=0.5)
-        exploded = minhash_fingerprint(pages_df, kernel).persist()
-        try:
-            default = {
-                (r["src"], r["dst"])
-                for r in lsh_star_edges_salted(exploded).distinct().collect()
-            }
-            explicit = {
-                (r["src"], r["dst"])
-                for r in lsh_star_edges_salted(exploded, salt_buckets=16)
-                .distinct()
-                .collect()
-            }
-            assert default == explicit
-        finally:
-            exploded.unpersist()
 
 
 class TestSimHashDedup:

@@ -1,57 +1,6 @@
-"""Streaming dedup + multimodal plumbing tests."""
+"""Streaming dedup tests."""
 
-import numpy as np
 import pytest
-from pyspark.sql import functions as F
-
-from text_dedup_spark.functions.multimodal import (
-    decode_media,
-    extract_features,
-    make_synth_media,
-    resize_image,
-    sample_frames,
-)
-
-
-@pytest.fixture(scope="module")
-def media_df(spark):
-    rows = [
-        (i, make_synth_media(kind=i % 3, w=32, h=16, n_frames=(i % 3) * 3 + 1, seed=i))
-        for i in range(20)
-    ]
-    return spark.createDataFrame(rows, "id long, media binary").repartition(4)
-
-
-class TestMultimodal:
-    def test_decode(self, media_df):
-        got = {r["id"]: r for r in decode_media(media_df).collect()}
-        assert len(got) == 20
-        for i in range(20):
-            assert got[i]["width"] == 32 and got[i]["height"] == 16
-            assert got[i]["n_frames"] == (i % 3) * 3 + 1
-            assert 0 <= got[i]["mean_px"] <= 255
-
-    def test_features_deterministic(self, media_df):
-        a = {r["id"]: r["features"] for r in extract_features(media_df).collect()}
-        b = {r["id"]: r["features"] for r in extract_features(media_df).collect()}
-        assert a == b
-        assert all(len(v) == 16 for v in a.values())
-        assert all(abs(sum(v) - 1.0) < 1e-9 for v in a.values())
-
-    def test_resize_roundtrip(self, media_df):
-        resized = resize_image(media_df, 8, 8)
-        meta = {r["id"]: r for r in decode_media(resized).collect()}
-        assert all(m["width"] == 8 and m["height"] == 8 and m["n_frames"] == 1 for m in meta.values())
-
-    def test_frame_sampling(self, media_df):
-        frames = sample_frames(media_df, every_k=2).collect()
-        expected = sum(len(range(0, (i % 3) * 3 + 1, 2)) for i in range(20))
-        assert len(frames) == expected
-
-    def test_non_synth_raises(self, spark):
-        df = spark.createDataFrame([(0, b"JPEG-ish-bytes")], "id long, media binary")
-        with pytest.raises(Exception, match="NotImplementedError|no codec"):
-            decode_media(df).collect()
 
 
 class TestStreamingDedup:
@@ -290,25 +239,3 @@ class TestStreamingDedup:
         )
         with pytest.raises(ValueError, match="pre-int64-band-key"):
             incremental_minhash_batch(spark, df, kernel, store)
-
-
-class TestMultimodalToSimilarity:
-    def test_media_features_feed_ann_and_dedup(self, spark):
-        """Composed pipeline: media binary -> histogram features ->
-        embedding-cosine dedup. Duplicated payloads (same seed) must cluster;
-        plumbing uses only public operator surfaces."""
-        from text_dedup_spark.functions.embedding_dedup import embedding_cosine_dedup
-        from pyspark.sql import functions as F
-
-        rows = []
-        for i in range(24):
-            seed = i % 8  # 3 copies of each of 8 distinct payloads
-            rows.append((i, make_synth_media(kind=0, w=16, h=16, n_frames=1, seed=seed)))
-        media = spark.createDataFrame(rows, "id long, media binary")
-        feats = extract_features(media).withColumnRenamed("id", "vec_id").withColumn(
-            "embedding", F.col("features").cast("array<float>")
-        )
-        res = embedding_cosine_dedup(feats, threshold=0.999)
-        got = {r["vec_id"]: r["cluster_id"] for r in res.collect()}
-        for i in range(24):
-            assert got[i] == i % 8  # identical payloads -> min-id cluster

@@ -82,12 +82,16 @@ class AlgorithmConfig:
     candidate_mode: str = "auto"
     all_pairs_gate: int = 200_000
     # --- execution profile ----------------------------------------------
-    # "parity": reference-faithful, no skew caps (default).
-    # "scale": pins non-None skew guards when unset — max_bucket_size=10000
-    # (SimHash hot-bucket cap) and max_cluster_verify=1000 (MinHash FP-verify
-    # cluster cap) — both observable via Observation metrics — plus the
-    # bounded-worst-task physical forms: band_edges_mode="salted" (MinHash
-    # star edges) and the "join" FP-verify contraction in both pipelines.
+    # The only input that picks a physical form in the MinHash and SimHash
+    # operators. "parity" (default): reference-faithful, no skew caps, and
+    # the one-exchange window forms (MinHash star edges and both FP-verify
+    # contractions). "scale": pins non-None skew guards when unset —
+    # max_bucket_size=10000 (SimHash hot-bucket cap) and
+    # max_cluster_verify=1000 (FP-verify cluster cap), both observable via
+    # Observation metrics — plus the bounded-worst-task forms: salted
+    # MinHash star edges (identical-fingerprint contraction when a
+    # distinct-ratio probe says it pays, salted groupBy-min + AQE-skew
+    # join-back) and the "join" FP-verify contraction in both pipelines.
     profile: str = "parity"
     max_bucket_size: int | None = None
     max_cluster_verify: int | None = None
@@ -95,16 +99,6 @@ class AlgorithmConfig:
     # size so partitions stay well under ~16 MB of sort input — see
     # operators.minhash.minhash_dedup). None = session shuffle partitions.
     band_partitions: int | None = None
-    # MinHash star-edge physical form: None resolves per profile ("window"
-    # under parity — one exchange; "salted" under scale — fingerprint
-    # contraction + salted two-phase groupBy-min + AQE-skew join-back, so
-    # the hottest band never lands whole in one task). Explicit values win.
-    band_edges_mode: str | None = None
-    # Salted-mode identical-fingerprint contraction: "auto" (default —
-    # a one-pass distinct-ratio probe decides whether the contraction's
-    # two extra exchanges pay for the band-explode rows they remove),
-    # "always", or "never". See minhash_dedup's break-even derivation.
-    fingerprint_contraction: str | None = None
     # --- reference drop-in compatibility fields -------------------------
     # Every shipped reference TOML parses unmodified. These knobs configure
     # the reference's single-node execution and have no Spark meaning (or a
@@ -162,15 +156,5 @@ def load_config(path: str) -> Config:
         raise ValueError(
             "algorithm.candidate_mode must be 'auto', 'all_pairs' or 'lsh', "
             f"got {cfg.algorithm.candidate_mode!r}"
-        )
-    if cfg.algorithm.band_edges_mode not in (None, "window", "salted"):
-        raise ValueError(
-            "algorithm.band_edges_mode must be 'window' or 'salted', "
-            f"got {cfg.algorithm.band_edges_mode!r}"
-        )
-    if cfg.algorithm.fingerprint_contraction not in (None, "auto", "always", "never"):
-        raise ValueError(
-            "algorithm.fingerprint_contraction must be 'auto', 'always' or "
-            f"'never', got {cfg.algorithm.fingerprint_contraction!r}"
         )
     return cfg

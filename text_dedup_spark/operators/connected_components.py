@@ -81,7 +81,7 @@ def connected_components(
         import pandas as pd
 
         # vectorized min-label propagation with pointer jumping — the same
-        # labels as kernels.union_find.UnionFind (pinned by the CC test
+        # labels as tests/oracles.UnionFind (pinned by the CC test
         # matrix, which runs this gate against the UF oracle), but ~30x
         # faster: the per-edge Python union() loop took ~29 s on 4M edges,
         # a SERIAL cost that capped measured scaling efficiency at any

@@ -18,19 +18,23 @@ Scale design (SURVEY.md §7.5):
   transitive closure, linear output.
 - Two physical forms of the star-edge step: ``lsh_star_edges`` (window-min,
   ONE exchange — fastest at bench scale, but a hot band key lands whole in
-  a single sort task) and ``lsh_star_edges_salted`` (salted two-phase
-  groupBy-min + AQE-skew-split join-back — per-reducer rows bounded under
-  arbitrarily hot bands; the scale profile's default). See each docstring.
+  a single sort task) and ``lsh_star_edges_salted`` (identical-fingerprint
+  contraction when a probe finds enough exact duplicates, then groupBy-min
+  + AQE-skew-split join-back — per-reducer rows bounded under arbitrarily
+  hot bands). The pipeline's ``algorithm.profile`` is the only selector:
+  "parity" runs the window forms, "scale" the salted star edges and the
+  join-form FP-verify contraction. See each docstring.
 - No collect_list anywhere; no driver-side maps. Cluster assignment is a
   shuffle join, broadcastable automatically when the cluster map is small.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
@@ -159,11 +163,10 @@ def lsh_star_edges(exploded: DataFrame) -> DataFrame:
     )
 
 
-def lsh_star_edges_salted(exploded: DataFrame, salt_buckets: int = 0) -> DataFrame:
+def lsh_star_edges_salted(exploded: DataFrame) -> DataFrame:
     """Hot-band-safe star edges: salted min-aggregation + AQE join-back
     (SURVEY.md §7.5's "salted groupBy" form; north-star scale requirement).
-    Same edge set as ``lsh_star_edges`` — min() is associative, so a min of
-    per-salt minima is the band minimum.
+    Same edge set as ``lsh_star_edges``.
 
     Why the window form can't serve 10^12 docs: a window partitioned by
     band key hashes every row of one band into ONE task's sort. Web corpora
@@ -175,49 +178,32 @@ def lsh_star_edges_salted(exploded: DataFrame, salt_buckets: int = 0) -> DataFra
        IS the salted first phase: every map task pre-combines its own rows
        per band (salt = input partition id, applied by Spark's
        HashAggregate(partial) automatically), so the reducer receives at
-       most #map-tasks rows per band key no matter how hot the band.
-       ``salt_buckets > 0`` additionally inserts an EXPLICIT
-       ``groupBy(band, xxhash64(id) % S)`` phase — only useful if a
-       non-algebraic aggregate (no partial form) ever replaces min; for
-       min it costs a full extra exchange of the exploded rows for zero
-       skew benefit (measured ~1.3x wall on 1M docs), so 0 is the default.
+       most #map-tasks rows per band key no matter how hot the band. An
+       explicit ``xxhash64(id) % S`` salt phase would add a full exchange
+       of the exploded rows for no skew benefit (measured ~1.3x wall on 1M
+       docs).
     2. join the band roots back to the exploded rows — the probe side's hot
        band partitions are AQE-skew-SPLIT (OptimizeSkewedJoin duplicates
        the one-row-per-band build side per split), so no task exceeds the
        skew threshold regardless of band heat.
 
-    More exchanges than the window's one — at bench scale the window wins
-    (see ``minhash_dedup.band_edges_mode``); under the scale profile this
-    form is pinned, because the window's worst task is O(hottest band) and
-    this one's is O(skew-split threshold)."""
-    if salt_buckets > 0:
-        salt = F.pmod(F.xxhash64(F.col(INDEX_COL)), F.lit(salt_buckets)).alias(
-            "__salt__"
-        )
-        pre = (
-            exploded.select("__band_idx__", "__band_val__", F.col(INDEX_COL), salt)
-            .groupBy("__band_idx__", "__band_val__", "__salt__")
-            .agg(F.min(INDEX_COL).alias("__m__"))
-        )
-    else:
-        pre = exploded.select(
-            "__band_idx__", "__band_val__", F.col(INDEX_COL).alias("__m__")
-        )
+    More exchanges than the window's one — at bench scale the window wins;
+    the scale profile runs this form, because the window's worst task is
+    O(hottest band) and this one's is O(skew-split threshold)."""
     # count >= 2: a single-member band can never produce an edge (its only
     # row IS the root), and on a mostly-unique web corpus single-member
     # bands are the overwhelming majority of distinct band values —
     # filtering them off the build side shrinks the join-back from
     # ~|distinct bands| to ~|duplicate-sharing bands| rows (often
     # broadcastable), and the inner join drops the matching probe rows for
-    # free. Only valid when counts are exact, i.e. salt_buckets=0 (one pre
-    # row per member); the explicit-salt phase pre-aggregates, so a single
-    # per-salt row can hide multiple members and the filter must stay off.
-    agg = [F.min("__m__").alias("__root__")]
-    if salt_buckets == 0:
-        agg.append(F.count(F.lit(1)).alias("__bn__"))
-    roots = pre.groupBy("__band_idx__", "__band_val__").agg(*agg)
-    if salt_buckets == 0:
-        roots = roots.where(F.col("__bn__") >= 2).drop("__bn__")
+    # free.
+    roots = (
+        exploded.select("__band_idx__", "__band_val__", F.col(INDEX_COL).alias("__m__"))
+        .groupBy("__band_idx__", "__band_val__")
+        .agg(F.min("__m__").alias("__root__"), F.count(F.lit(1)).alias("__bn__"))
+        .where(F.col("__bn__") >= 2)
+        .drop("__bn__")
+    )
     return (
         exploded.join(roots, ["__band_idx__", "__band_val__"])
         .where(F.col(INDEX_COL) != F.col("__root__"))
@@ -286,9 +272,9 @@ def _contract_text_groups(
 ) -> DataFrame:
     """Attach ``__trep__`` (min id of the (cluster, identical-text) group)
     and ``__tsz__`` (group size) to every candidate row — the identical-text
-    contraction both FP-verification operators share. ``contraction`` picks
-    the physical form (see the call sites): "window" = one exchange, worst
-    task O(largest identical-text group); "join" = partial-agg groupBy +
+    contraction of ``_verify_clusters``. ``contraction`` picks the physical
+    form: "window" (parity) = one exchange, worst task O(largest
+    identical-text group); "join" (scale) = partial-agg groupBy +
     AQE-skew-split join-back, worst task bounded."""
     if contraction not in ("window", "join"):
         raise ValueError(
@@ -307,6 +293,116 @@ def _contract_text_groups(
         F.min(INDEX_COL).alias("__trep__"), F.count(F.lit(1)).alias("__tsz__")
     )
     return with_key.join(groups, [cluster_col, "__tkey__"]).drop("__tkey__")
+
+
+def _verify_clusters(
+    docs: DataFrame,
+    ngram_size: int,
+    min_length: int,
+    threshold: float,
+    regroup: Callable[[DataFrame, DataFrame, DataFrame | None], DataFrame],
+    bypass_observation: Observation | str,
+    text_col: str = "text",
+    max_cluster_verify: int | None = None,
+    contraction: str = "window",
+) -> tuple[DataFrame, DataFrame]:
+    """The FP-verification core of both pipelines: the pairwise Jaccard
+    re-check of each cluster's duplicate candidates. Returns ``(docs with
+    __CLUSTER__ reassigned, new (id, cluster) map)``; docs outside the new
+    map revert to their own id, and __duplicate__ is NOT updated (reference
+    quirk, ``minhash.py:101-170`` / ``simhash.py:93-173``).
+
+    Only the regroup differs per algorithm: ``regroup(cand, verified,
+    bypassed) -> (id, cluster)`` gets the contracted candidates (one row
+    per doc with ``__trep__``/``__tsz__``), the verified rep pairs
+    ``(id1, id2)`` and the bypassed ``(idx, __CLUSTER__)`` rows (None
+    without a cap).
+
+    ``max_cluster_verify`` (scale guard, None = reference-faithful):
+    clusters with more DISTINCT texts than the cap skip pairwise
+    verification and keep their assignment (a 10M-member exact-duplicate
+    boilerplate cluster is ONE distinct text and never trips it; the cap
+    bounds genuinely-distinct near-miss variety). Bypassed membership is
+    counted as ``n_bypassed`` on ``bypass_observation`` — never a silent
+    drop."""
+    cand = docs.where(F.col(DUPLICATE_COL)).select(INDEX_COL, text_col, CLUSTER_COL)
+
+    # --- identical-text contraction (lossless) -------------------------
+    # Within a cluster, docs with byte-identical text always verify against
+    # each other (Jaccard(t, t) = 1.0 >= threshold), and every cross-text
+    # pair's Jaccard depends only on the two TEXTS — so the quadratic
+    # pairwise re-check runs over one representative per distinct text.
+    # Boilerplate mega-clusters are overwhelmingly exact duplicates — the
+    # case that made the O(m^2) verify a scale hazard — and contract to a
+    # handful of distinct texts. The "window" form (parity) measured 1.3x
+    # faster than a join-back at sf0.1 (the join drags the TEXT column
+    # through a second exchange), but one (cluster, text-hash) group is one
+    # sort task; the "join" form (scale) bounds the worst task by the skew
+    # threshold.
+    # persisted: cand feeds the cap sizing, the rep selection AND the
+    # regroup — without it each consumer re-runs the whole upstream
+    # (assignment join + contraction) once per scan. Bounded: dup
+    # candidates only (same size class as the reference's verify working
+    # set), released after new_map materializes below. cand_cache keeps a
+    # handle on the PERSISTED frame: `cand` is rebound under
+    # max_cluster_verify, and unpersisting the derived plan would be a
+    # silent no-op (CacheManager matches by sameResult) — the cached
+    # contraction would leak for the session.
+    cand_cache = _contract_text_groups(cand, text_col, contraction).persist()
+    cand = cand_cache
+
+    bypassed = None
+    if max_cluster_verify is not None:
+        # the cap bounds DISTINCT texts per cluster (identical-text floods
+        # are contracted and never inflate the pair count)
+        sizes = cand.where(F.col(INDEX_COL) == F.col("__trep__")).groupBy(
+            CLUSTER_COL
+        ).agg(F.count(F.lit(1)).alias("__csz__"))
+        cand_all = cand.join(sizes, CLUSTER_COL)
+        bypassed = cand_all.where(F.col("__csz__") > max_cluster_verify).select(
+            F.col(INDEX_COL).alias("idx"), F.col(CLUSTER_COL)
+        )
+        # observable, never silent: readable post-action via Observation
+        bypassed = bypassed.observe(
+            bypass_observation, F.count(F.lit(1)).alias("n_bypassed")
+        )
+        cand = cand_all.where(F.col("__csz__") <= max_cluster_verify).drop("__csz__")
+
+    # one gram pass per rep, then JVM array_intersect Jaccard per pair —
+    # the O(pairs) cost runs in whole-stage codegen, not Python. Persisted:
+    # reps backs BOTH sides of the pair self-join — uncached, the gram UDF
+    # would run twice (once per side). Cache only (cluster, id, grams): the
+    # pair join never reads the raw text, and caching it alongside would
+    # roughly double the cache bytes.
+    reps = (
+        cand.where(F.col(INDEX_COL) == F.col("__trep__"))
+        .withColumn("__G__", gram_set_udf(ngram_size, min_length)(F.col(text_col)))
+        .select(CLUSTER_COL, INDEX_COL, "__G__")
+        .persist()
+    )
+    left = reps.select(
+        F.col(CLUSTER_COL), F.col(INDEX_COL).alias("id1"), F.col("__G__").alias("g1")
+    )
+    right = reps.select(
+        F.col(CLUSTER_COL), F.col(INDEX_COL).alias("id2"), F.col("__G__").alias("g2")
+    )
+    pairs = left.join(right, CLUSTER_COL).where(F.col("id1") < F.col("id2"))
+    verified = pairs.where(jaccard_ge_expr(F.col("g1"), F.col("g2"), threshold))
+
+    new_map = regroup(cand, verified, bypassed)
+    # materialize the verified mapping once (it is small — verified dup docs
+    # only), then release the working caches: without this, the caller's
+    # docs-action AND its clusters-action would each re-run the pair join
+    new_map = new_map.localCheckpoint(eager=True)
+    cand_cache.unpersist()
+    reps.unpersist()
+    reassigned = (
+        docs.drop(CLUSTER_COL)
+        .join(new_map.withColumnRenamed("id", INDEX_COL), INDEX_COL, "left")
+        .withColumn(CLUSTER_COL, F.coalesce(F.col("cluster"), F.col(INDEX_COL)))
+        .drop("cluster")
+    )
+    return reassigned, new_map
 
 
 def assign_clusters(docs: DataFrame, mapping: DataFrame) -> DataFrame:
@@ -331,157 +427,69 @@ def check_false_positives(
 ) -> tuple[DataFrame, DataFrame]:
     """Intra-cluster pairwise Jaccard re-check, re-assign min-idx within the
     *old* cluster (exact semantics of reference ``minhash.py:101-170`` —
-    nodes failing verification revert to their own id; the __duplicate__
-    flag is intentionally NOT updated, as in the reference).
+    nodes failing verification revert to their own id). The shared core,
+    the ``max_cluster_verify`` cap and its ``fp_bypassed`` count are
+    ``_verify_clusters``'s.
 
-    ``max_cluster_verify`` (scale guard, default None = reference-faithful):
-    clusters with more DISTINCT texts than the cap skip pairwise
-    verification and keep their assignment (identical texts contract before
-    the pair join — see below — so a 10M-member exact-duplicate boilerplate
-    cluster is ONE distinct text and never trips the cap; the cap bounds
-    genuinely-distinct near-miss variety). Bypassed membership is observable
-    via the ``fp_bypassed`` metric — never a silent drop."""
-    cand = docs.where(F.col(DUPLICATE_COL)).select(INDEX_COL, text_col, CLUSTER_COL)
+    A text group is verified iff it has >=2 members or its rep verifies
+    against some other distinct text; verified membership and the min-idx
+    regroup run over the full doc set, so the output is exactly the
+    reference's."""
 
-    # --- identical-text contraction (lossless) -------------------------
-    # Within a cluster, docs with byte-identical text always verify against
-    # each other (Jaccard(t, t) = 1.0 >= threshold), and every cross-text
-    # pair's Jaccard depends only on the two TEXTS — so the quadratic
-    # pairwise re-check runs over one representative per distinct text, and
-    # a text group is verified iff it has >=2 members or its rep verifies
-    # against some other distinct text. Verified-membership and the min-idx
-    # regroup are computed over the full doc set, so the output is exactly
-    # the reference's (minhash.py:101-170). Boilerplate mega-clusters are
-    # overwhelmingly exact duplicates — the case that made the O(m^2)
-    # verify a scale hazard — and contract to a handful of distinct texts.
-    # Two rep-selection forms, same trade as the band star edges:
-    # - "window" (parity default): one exchange; measured 1.3x faster than
-    #   a join-back at sf0.1 (the join would drag the TEXT column through a
-    #   second exchange). But one (cluster, text-hash) group = one sort
-    #   task — a 10M-member exact-duplicate cluster lands whole in it.
-    # - "join" (scale): partial-agg groupBy min/count + AQE-skew-split
-    #   join-back — worst task bounded by the skew threshold, the form a
-    #   10^12-doc run needs (pinned to the salted star-edge mode by
-    #   minhash_dedup).
-    # persisted: cand feeds the cap sizing, the rep selection AND the
-    # verified-membership join — without it each consumer re-runs the whole
-    # upstream (assignment join + contraction) once per scan. Bounded: dup
-    # candidates only (same size class as the reference's verify working
-    # set), released after new_map materializes below. cand_cache keeps a
-    # handle on the PERSISTED frame: `cand` is rebound under
-    # max_cluster_verify, and unpersisting the derived plan would be a
-    # silent no-op (CacheManager matches by sameResult) — the cached
-    # contraction would leak for the session.
-    cand_cache = _contract_text_groups(cand, text_col, contraction).persist()
-    cand = cand_cache
-
-    bypassed = None
-    if max_cluster_verify is not None:
-        # the cap bounds DISTINCT texts per cluster (identical-text floods
-        # are contracted and never inflate the pair count)
-        sizes = cand.where(F.col(INDEX_COL) == F.col("__trep__")).groupBy(
-            CLUSTER_COL
-        ).agg(F.count(F.lit(1)).alias("__csz__"))
-        cand_all = cand.join(sizes, CLUSTER_COL)
-        bypassed = cand_all.where(F.col("__csz__") > max_cluster_verify).select(
-            F.col(INDEX_COL).alias("idx"), F.col(CLUSTER_COL)
+    def regroup(cand, verified, bypassed):
+        # both endpoints from ONE scan of the quadratic pair join: a union
+        # of the id1 and id2 columns would re-run the pair-Jaccard filter —
+        # the verify stage's dominant cost — once per side
+        verified_reps = verified.select(
+            F.explode(F.array(F.col("id1"), F.col("id2"))).alias("__trep__")
         )
-        # observable, never silent: readable post-action via Observation
-        bypassed = bypassed.observe(
-            observation if observation is not None else "fp_bypassed",
-            F.count(F.lit(1)).alias("n_bypassed"),
-        )
-        cand = cand_all.where(F.col("__csz__") <= max_cluster_verify).drop("__csz__")
-
-    # one gram pass per rep, then JVM array_intersect Jaccard per pair —
-    # the O(pairs) cost runs in whole-stage codegen, not Python. Persisted:
-    # reps backs BOTH sides of the pair self-join — uncached, the gram UDF
-    # would run twice (once per side). Cache only (cluster, id, grams): the
-    # pair join never reads the raw text, so caching it alongside (the
-    # previous shape) roughly doubled the cache bytes for nothing.
-    reps = (
-        cand.where(F.col(INDEX_COL) == F.col("__trep__"))
-        .withColumn(
-            "__G__",
-            gram_set_udf(kernel.ngram_size, kernel.min_length)(F.col(text_col)),
-        )
-        .select(CLUSTER_COL, INDEX_COL, "__G__")
-        .persist()
-    )
-    left = reps.select(
-        F.col(CLUSTER_COL),
-        F.col(INDEX_COL).alias("id1"),
-        F.col("__G__").alias("g1"),
-    )
-    right = reps.select(
-        F.col(CLUSTER_COL),
-        F.col(INDEX_COL).alias("id2"),
-        F.col("__G__").alias("g2"),
-    )
-    pairs = left.join(right, CLUSTER_COL).where(F.col("id1") < F.col("id2"))
-    verified = pairs.where(
-        jaccard_ge_expr(F.col("g1"), F.col("g2"), kernel.threshold)
-    )
-    # ONE scan of the quadratic pair join for both endpoints: the former
-    # union(id1, id2) form scanned `verified` twice, re-running the
-    # pair-Jaccard filter — the verify stage's dominant cost — once per side
-    verified_reps = verified.select(
-        F.explode(F.array(F.col("id1"), F.col("id2"))).alias("__trep__")
-    )
-    # a group verifies via size >= 2 (J = 1.0 pairs, iff the threshold is
-    # satisfiable by identity) or via its rep's cross-text pairs. The two
-    # branches partition cand on the auto predicate, so their union is
-    # duplicate-free without any distinct — and the semi join tolerates
-    # duplicate build rows, so verified_reps needs no distinct either
-    # (the former distinct + left-join + null-filter form paid one extra
-    # exchange for the same set). cand is unique per doc id and bypassed
-    # is disjoint from it (opposite __csz__ filter).
-    auto = F.col("__tsz__") >= 2 if kernel.threshold <= 1.0 else F.lit(False)
-    members = (
-        cand.where(auto)
-        .select(F.col(INDEX_COL).alias("idx"), F.col(CLUSTER_COL))
-        .unionByName(
-            cand.where(~auto)
-            .join(verified_reps, "__trep__", "left_semi")
+        # a group verifies via size >= 2 (J = 1.0 pairs, iff the threshold
+        # is satisfiable by identity) or via its rep's cross-text pairs. The
+        # two branches partition cand on the auto predicate, so their union
+        # is duplicate-free without any distinct — and the semi join
+        # tolerates duplicate build rows, so verified_reps needs no distinct
+        # either. cand is unique per doc id and bypassed is disjoint from it
+        # (opposite cap filter).
+        auto = F.col("__tsz__") >= 2 if kernel.threshold <= 1.0 else F.lit(False)
+        members = (
+            cand.where(auto)
             .select(F.col(INDEX_COL).alias("idx"), F.col(CLUSTER_COL))
-        )
-    )
-    if bypassed is not None:
-        members = members.unionByName(bypassed)
-    # min-idx regroup within the OLD cluster. Two physical forms, same
-    # window-vs-join trade as the text contraction above: the window is one
-    # exchange and evaluates the `members` subtree (cache scans + the semi
-    # join against the pair-join output) ONCE, where the join form planned
-    # it twice — build and probe side — for an extra exchange; its worst
-    # task is O(largest old cluster), which the parity profile accepts and
-    # the scale profile ("join") must not.
-    if contraction == "window":
-        from pyspark.sql import Window
-
-        new_map = members.withColumn(
-            "__newc__", F.min("idx").over(Window.partitionBy(CLUSTER_COL))
-        ).select(F.col("idx").alias("id"), F.col("__newc__").alias("cluster"))
-    else:
-        new_map = (
-            members.join(
-                members.groupBy(CLUSTER_COL).agg(F.min("idx").alias("__newc__")),
-                CLUSTER_COL,
+            .unionByName(
+                cand.where(~auto)
+                .join(verified_reps, "__trep__", "left_semi")
+                .select(F.col(INDEX_COL).alias("idx"), F.col(CLUSTER_COL))
             )
-            .select(F.col("idx").alias("id"), F.col("__newc__").alias("cluster"))
         )
-    # materialize the verified mapping once (it is small — verified dup docs
-    # only), then release the working caches: without this, the caller's
-    # docs-action AND its clusters-action would each re-run the pair join
-    new_map = new_map.localCheckpoint(eager=True)
-    cand_cache.unpersist()
-    reps.unpersist()
-    reassigned = (
-        docs.drop(CLUSTER_COL)
-        .join(new_map.withColumnRenamed("id", INDEX_COL), INDEX_COL, "left")
-        .withColumn(CLUSTER_COL, F.coalesce(F.col("cluster"), F.col(INDEX_COL)))
-        .drop("cluster")
+        if bypassed is not None:
+            members = members.unionByName(bypassed)
+        # min-idx regroup within the OLD cluster, same window-vs-join trade
+        # as the text contraction: the window is one exchange and evaluates
+        # the `members` subtree ONCE, where the join form plans it twice —
+        # build and probe side — for an extra exchange; its worst task is
+        # O(largest old cluster), which the parity profile accepts and the
+        # scale profile ("join") must not.
+        if contraction == "window":
+            from pyspark.sql import Window
+
+            return members.withColumn(
+                "__newc__", F.min("idx").over(Window.partitionBy(CLUSTER_COL))
+            ).select(F.col("idx").alias("id"), F.col("__newc__").alias("cluster"))
+        return members.join(
+            members.groupBy(CLUSTER_COL).agg(F.min("idx").alias("__newc__")),
+            CLUSTER_COL,
+        ).select(F.col("idx").alias("id"), F.col("__newc__").alias("cluster"))
+
+    return _verify_clusters(
+        docs,
+        kernel.ngram_size,
+        kernel.min_length,
+        kernel.threshold,
+        regroup,
+        observation if observation is not None else "fp_bypassed",
+        text_col,
+        max_cluster_verify,
+        contraction,
     )
-    return reassigned, new_map
 
 
 def minhash_dedup(
@@ -496,7 +504,6 @@ def minhash_dedup(
     max_cluster_verify: int | None = None,
     band_partitions: int | None = None,
     band_edges_mode: str = "window",
-    fingerprint_contraction: str = "auto",
     observation=None,
 ) -> MinHashDedupResult:
     """End-to-end MinHash dedup. ``df`` must already carry a unique long id
@@ -516,34 +523,17 @@ def minhash_dedup(
     which would otherwise merge the sort back to defaultParallelism-sized
     partitions. None = session ``spark.sql.shuffle.partitions``.
 
-    ``band_edges_mode``: ``"window"`` (default — one exchange, fastest when
-    no band is pathologically hot) or ``"salted"`` (identical-fingerprint
-    contraction + salted two-phase groupBy-min + AQE-skew-split join-back —
-    worst task bounded regardless of band heat; the scale profile pins
-    this). Cluster assignments are identical between modes (min is
-    associative; contraction preserves the transitive closure).
-
-    ``fingerprint_contraction`` (salted mode only): ``"auto"`` (default)
-    probes the duplicate-fingerprint mass with ONE pass over the slim
-    fingerprint cache (count + approx_count_distinct in a single aggregate)
-    and skips the contraction when the corpus is mostly unique;
-    ``"always"``/``"never"`` force it. Economics of the gate: contraction
-    spends ~2 exchanges of n narrow fingerprint rows to save
-    (1 - distinct_ratio) of the n*b-row band explode + exchange — with
-    b ~ 13 bands the break-even sits near distinct_ratio ~ 0.85, so auto
-    skips above that (the probe's ~2% approx error only matters exactly at
-    break-even, where either choice costs the same). Cluster output is
-    identical either way; skew safety does not depend on the gate — the
-    salted groupBy's map-side partial aggregation and the AQE-skew-split
-    join-back bound per-task work with or without contraction."""
+    ``band_edges_mode`` is the physical form of every stage, resolved by
+    the pipeline from ``algorithm.profile``: ``"window"`` (parity — one
+    exchange per step, fastest when no band is pathologically hot) or
+    ``"salted"`` (scale — identical-fingerprint contraction when it pays,
+    salted groupBy-min + AQE-skew-split join-back, and the join-form
+    FP-verify contraction: worst task bounded regardless of band heat).
+    Cluster assignments are identical between modes (min is associative;
+    contraction preserves the transitive closure)."""
     if band_edges_mode not in ("window", "salted"):
         raise ValueError(
             f"band_edges_mode must be 'window' or 'salted', got {band_edges_mode!r}"
-        )
-    if fingerprint_contraction not in ("auto", "always", "never"):
-        raise ValueError(
-            "fingerprint_contraction must be 'auto', 'always' or 'never', "
-            f"got {fingerprint_contraction!r}"
         )
     docs = df if id_col == INDEX_COL else df.withColumn(INDEX_COL, F.col(id_col))
     if repartition_input:
@@ -552,48 +542,42 @@ def minhash_dedup(
     with_bands = fingerprint_bands(docs, kernel, text_col)
     filtered = with_bands.where(F.col("__BANDS__").isNotNull())
 
+    rep_rows, contraction_edges = filtered, None
     if band_edges_mode == "salted":
-        contract = fingerprint_contraction != "never"
-        if fingerprint_contraction == "auto":
-            # one distributed pass over the slim cache (populates it too —
-            # work the band phase needs anyway); see the docstring's
-            # break-even derivation for the 0.85 ratio
-            probe = filtered.select(
-                F.count(F.lit(1)).alias("n"),
-                # rsd=0.02 makes the docstring's "~2% approx error" true
-                # (the default is 5%); near the 0.85 break-even either
-                # gate choice costs the same, so tighter is free accuracy
-                F.approx_count_distinct(F.xxhash64("__BANDS__"), rsd=0.02).alias("nd"),
-            ).first()
-            contract = probe["nd"] < 0.85 * probe["n"]
-        if contract:
+        # Contract identical fingerprints only when the corpus has enough
+        # of them: contraction spends ~2 exchanges of n narrow fingerprint
+        # rows to save (1 - distinct_ratio) of the n*b-row band explode +
+        # exchange — with b ~ 13 bands the break-even sits near
+        # distinct_ratio ~ 0.85. ONE distributed pass over the slim cache
+        # (count + approx_count_distinct; it populates the cache too, work
+        # the band phase needs anyway) measures the ratio. rsd=0.02 (the
+        # default is 5%): near break-even either choice costs the same, so
+        # tighter is free accuracy. Output is identical either way, and
+        # skew safety does not depend on the gate — the salted groupBy's
+        # map-side partial aggregation and the AQE-skew-split join-back
+        # bound per-task work with or without contraction.
+        probe = filtered.select(
+            F.count(F.lit(1)).alias("n"),
+            F.approx_count_distinct(F.xxhash64("__BANDS__"), rsd=0.02).alias("nd"),
+        ).first()
+        if probe["nd"] < 0.85 * probe["n"]:
             rep_rows, contraction_edges = contract_identical_fingerprints(
                 filtered, num_partitions=band_partitions
             )
-        else:
-            rep_rows = filtered
-            contraction_edges = None
-        exploded = _explode_bands(rep_rows, kernel)
-        if band_partitions:
-            # pin the band exchange width here too: the groupBy's required
-            # distribution is satisfied by this repartition and the
-            # join-back probe shares it — band_partitions governs the sort
-            # width of the salted path exactly as it does the window's
-            exploded = exploded.repartition(
-                band_partitions, "__band_idx__", "__band_val__"
-            )
+    exploded = _explode_bands(rep_rows, kernel)
+    if band_partitions:
+        # pre-partition on the band keys: satisfies the window's required
+        # clustering and the salted groupBy's distribution (the join-back
+        # probe shares it), so no second exchange, while pinning the sort
+        # width
+        exploded = exploded.repartition(
+            band_partitions, "__band_idx__", "__band_val__"
+        )
+    if band_edges_mode == "salted":
         edges = lsh_star_edges_salted(exploded)
         if contraction_edges is not None:
             edges = edges.unionByName(contraction_edges)
     else:
-        exploded = _explode_bands(filtered, kernel)
-        if band_partitions:
-            # pre-partition on the window's own keys: satisfies the window's
-            # required clustering (no second exchange) while pinning the sort
-            # width
-            exploded = exploded.repartition(
-                band_partitions, "__band_idx__", "__band_val__"
-            )
         edges = lsh_star_edges(exploded)
     edges = edges.observe(
         "minhash_edges", F.count(F.lit(1)).alias("n_edges")
@@ -612,8 +596,6 @@ def minhash_dedup(
             text_col,
             max_cluster_verify=max_cluster_verify,
             observation=observation,
-            # one knob, one meaning: "salted" = bounded worst task in every
-            # stage, so the verify contraction switches to the join form too
             contraction="join" if band_edges_mode == "salted" else "window",
         )
 

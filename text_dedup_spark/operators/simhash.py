@@ -47,7 +47,7 @@ from pyspark.sql.types import (
 from text_dedup_spark.kernels.simhash_kernel import SimHashKernel
 from text_dedup_spark.operators.connected_components import connected_components
 from text_dedup_spark.operators.ids import CLUSTER_COL, DUPLICATE_COL, INDEX_COL
-from text_dedup_spark.operators.minhash import gram_set_udf, jaccard_ge_expr
+from text_dedup_spark.operators.minhash import _verify_clusters
 
 
 @dataclass
@@ -118,9 +118,11 @@ def simhash_edges(
     bit_diff: int,
     max_bucket_size: int | None = None,
     observation=None,
-    dedup: bool = True,
 ) -> DataFrame:
     """All-pairs-within-bucket Hamming join -> edges. JVM-side popcount.
+    No distinct: a pair that shares k buckets emits k edges, which
+    ``connected_components`` dedups itself (an extra distinct would be a
+    pure shuffle tax).
 
     ``max_bucket_size`` caps pathological buckets (within-bucket pair count
     is quadratic). Via ``simhash_dedup`` the input rows are one per DISTINCT
@@ -162,19 +164,12 @@ def simhash_edges(
     hamming = F.bit_count(F.col("lo1").bitwiseXOR(F.col("lo2"))) + F.bit_count(
         F.col("hi1").bitwiseXOR(F.col("hi2"))
     )
-    out = (
+    return (
         left.join(right, "__key__")
         .where(F.col("id1") < F.col("id2"))
         .where(hamming <= F.lit(bit_diff))
         .select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
     )
-    # ``dedup=False`` skips the distinct exchange when the consumer is
-    # duplicate-tolerant (connected_components dedups / scatter-mins its
-    # input itself) — a pair sharing several permutation buckets emits one
-    # edge per bucket, which changes nothing downstream (guide §2.4:
-    # "a distinct on data whose consumer dedups anyway" is a pure
-    # shuffle tax). Default True preserves the standalone contract.
-    return out.distinct() if dedup else out
 
 
 def simhash_check_false_positives(
@@ -187,118 +182,54 @@ def simhash_check_false_positives(
     contraction: str = "window",
 ) -> tuple[DataFrame, DataFrame]:
     """Intra-cluster pairwise Jaccard -> fresh CC over verified pairs
-    (reference ``simhash.py:93-173``). __duplicate__ NOT updated.
+    (reference ``simhash.py:93-173``). The shared core, the
+    ``max_cluster_verify`` cap and its ``simhash_fp_bypassed`` count are
+    ``minhash._verify_clusters``'s.
 
-    Identical-text contraction (lossless, mirrors
-    ``minhash.check_false_positives``): within a cluster, byte-identical
-    texts always verify against each other (J = 1.0 >= threshold for any
-    threshold <= 1.0) and every cross-text pair's Jaccard depends only on
-    the two TEXTS — so the quadratic pair join runs over one representative
-    per distinct text, and the fresh CC consumes rep->member star edges
-    (for text groups of size >= 2) plus the verified rep-rep pairs: the
-    transitive closure is exactly the all-pairs graph's (pinned by the
-    ``simhash_dedup_verified_md5`` oracle, whose SQL replays plain
-    all-pairs). A 10k-member exact-duplicate cluster is ONE distinct text
-    here, not 5*10^7 Jaccard pairs.
+    The pair join runs over one representative per distinct text, so the
+    fresh CC consumes rep->member star edges (for text groups of size >= 2)
+    plus the verified rep-rep pairs: the transitive closure is exactly the
+    all-pairs graph's (pinned by the ``simhash_dedup_verified_md5`` oracle,
+    whose SQL replays plain all-pairs). A 10k-member exact-duplicate
+    cluster is ONE distinct text here, not 5*10^7 Jaccard pairs."""
 
-    ``max_cluster_verify`` (scale guard, default None = reference-faithful):
-    clusters with more DISTINCT texts than the cap skip pairwise
-    verification and keep their assignment — identical-text floods never
-    trip it. Bypassed membership is observable via ``n_bypassed``, never
-    silent."""
-    cand = docs.where(F.col(DUPLICATE_COL)).select(INDEX_COL, text_col, CLUSTER_COL)
-    # shared contraction helper — "window" (parity, one exchange) or "join"
-    # (scale: partial-agg groupBy + AQE-skew join-back, worst task bounded;
-    # see minhash._contract_text_groups)
-    from text_dedup_spark.operators.minhash import _contract_text_groups
-
-    # persisted (mirrors minhash.check_false_positives): cand feeds the cap
-    # sizing, rep selection AND the star edges; uncached, each scan re-runs
-    # the upstream assignment join + contraction. Released after new_map
-    # materializes below. cand_cache keeps a handle on the PERSISTED frame:
-    # `cand` is rebound under max_cluster_verify and unpersisting the
-    # derived plan would silently no-op (CacheManager sameResult match).
-    cand_cache = (
-        _contract_text_groups(cand, text_col, contraction).drop("__tsz__").persist()
-    )
-    cand = cand_cache
-
-    bypassed = None
-    if max_cluster_verify is not None:
-        # the cap bounds DISTINCT texts per cluster
-        sizes = cand.where(F.col(INDEX_COL) == F.col("__trep__")).groupBy(
-            CLUSTER_COL
-        ).agg(F.count(F.lit(1)).alias("__csz__"))
-        cand_all = cand.join(sizes, CLUSTER_COL)
-        bypassed = cand_all.where(F.col("__csz__") > max_cluster_verify).select(
-            F.col(INDEX_COL).alias("idx"), F.col(CLUSTER_COL)
+    def regroup(cand, verified, bypassed):
+        # star edges reconnect identical-text members to their rep (valid
+        # iff identity satisfies the threshold, i.e. threshold <= 1.0)
+        star = (
+            cand.where(F.col(INDEX_COL) != F.col("__trep__")).select(
+                F.col("__trep__").alias("src"), F.col(INDEX_COL).alias("dst")
+            )
+            if jaccard_threshold <= 1.0
+            else cand.limit(0).select(
+                F.col(INDEX_COL).alias("src"), F.col(INDEX_COL).alias("dst")
+            )
         )
-        bypassed = bypassed.observe(
-            observation if observation is not None else "simhash_fp_bypassed",
-            F.count(F.lit(1)).alias("n_bypassed"),
+        new_map = connected_components(
+            verified.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
+            .unionByName(star)
         )
-        cand = cand_all.where(F.col("__csz__") <= max_cluster_verify).drop("__csz__")
-    # one gram pass per rep, then JVM array_intersect Jaccard per pair
-    # (bit-identical to the Python kernel — see jaccard_ge_expr). Persisted:
-    # reps backs both sides of the pair self-join (uncached, the gram UDF
-    # runs once per side). Cache only (cluster, id, grams) — the pair join
-    # never reads the raw text column.
-    reps = (
-        cand.where(F.col(INDEX_COL) == F.col("__trep__"))
-        .withColumn(
-            "__G__",
-            gram_set_udf(kernel.ngram_size, kernel.min_length)(F.col(text_col)),
-        )
-        .select(CLUSTER_COL, INDEX_COL, "__G__")
-        .persist()
-    )
-    left = reps.select(
-        F.col(CLUSTER_COL), F.col(INDEX_COL).alias("id1"), F.col("__G__").alias("g1")
-    )
-    right = reps.select(
-        F.col(CLUSTER_COL), F.col(INDEX_COL).alias("id2"), F.col("__G__").alias("g2")
-    )
-    pairs = left.join(right, CLUSTER_COL).where(F.col("id1") < F.col("id2"))
-    verified = pairs.where(
-        jaccard_ge_expr(F.col("g1"), F.col("g2"), jaccard_threshold)
-    )
-    # star edges reconnect identical-text members to their rep (valid iff
-    # identity satisfies the threshold, i.e. threshold <= 1.0)
-    star = (
-        cand.where(F.col(INDEX_COL) != F.col("__trep__")).select(
-            F.col("__trep__").alias("src"), F.col(INDEX_COL).alias("dst")
-        )
-        if jaccard_threshold <= 1.0
-        else cand.limit(0).select(
-            F.col(INDEX_COL).alias("src"), F.col(INDEX_COL).alias("dst")
-        )
-    )
-    new_map = connected_components(
-        verified.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-        .unionByName(star)
-    )
-    if bypassed is not None:
+        if bypassed is None:
+            return new_map
         # bypassed clusters keep their assignment verbatim; their min-id
         # labels can't collide with the fresh CC's labels (a bypassed
         # cluster's root is itself bypassed, so it never enters a verified
         # pair)
-        new_map = new_map.unionByName(
+        return new_map.unionByName(
             bypassed.select(F.col("idx").alias("id"), F.col(CLUSTER_COL).alias("cluster"))
         )
-    # materialize the verified mapping once (small — verified dup docs only),
-    # then release the working caches: without this, the caller's docs-action
-    # AND its clusters-action would each re-run the pair join (mirrors
-    # minhash.check_false_positives)
-    new_map = new_map.localCheckpoint(eager=True)
-    cand_cache.unpersist()
-    reps.unpersist()
-    reassigned = (
-        docs.drop(CLUSTER_COL)
-        .join(new_map.withColumnRenamed("id", INDEX_COL), INDEX_COL, "left")
-        .withColumn(CLUSTER_COL, F.coalesce(F.col("cluster"), F.col(INDEX_COL)))
-        .drop("cluster")
+
+    return _verify_clusters(
+        docs,
+        kernel.ngram_size,
+        kernel.min_length,
+        jaccard_threshold,
+        regroup,
+        observation if observation is not None else "simhash_fp_bypassed",
+        text_col,
+        max_cluster_verify,
+        contraction,
     )
-    return reassigned, new_map
 
 
 def simhash_dedup(
@@ -365,9 +296,7 @@ def simhash_dedup(
             F.explode_outer("__keys__").alias("__key__"),
         )
     )
-    bucket_edges = simhash_edges(
-        fps, kernel.bit_diff, max_bucket_size, observation, dedup=False
-    )
+    bucket_edges = simhash_edges(fps, kernel.bit_diff, max_bucket_size, observation)
     edges = member_edges.unionByName(bucket_edges)
     mapping = connected_components(edges, driver_threshold=cc_driver_threshold)
 

@@ -195,15 +195,15 @@ def run_pipeline(config: Config, spark: SparkSession | None = None) -> dict:
     max_bucket_size = algo.max_bucket_size
     max_cluster_verify = algo.max_cluster_verify
     max_group_bytes = None
-    band_edges_mode = algo.band_edges_mode or "window"
+    # MinHash physical forms: one-exchange windows under parity, the
+    # hot-band-safe salted star edges (and join-form verify) under scale
+    band_edges_mode = "salted" if algo.profile == "scale" else "window"
     if algo.profile == "scale":
         max_bucket_size = 10_000 if max_bucket_size is None else max_bucket_size
         max_cluster_verify = (
             1_000 if max_cluster_verify is None else max_cluster_verify
         )
         max_group_bytes = 64 << 20  # bound per-task suffix-array corpora
-        # hot-band-safe star edges (salted groupBy-min + AQE join-back)
-        band_edges_mode = algo.band_edges_mode or "salted"
     t0 = time.time()
 
     runner = None
@@ -276,7 +276,6 @@ def run_pipeline(config: Config, spark: SparkSession | None = None) -> dict:
                 max_cluster_verify=max_cluster_verify,
                 band_partitions=algo.band_partitions,
                 band_edges_mode=band_edges_mode,
-                fingerprint_contraction=algo.fingerprint_contraction or "auto",
             )
             return res.docs
 

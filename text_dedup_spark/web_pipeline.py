@@ -46,14 +46,13 @@ def dedup_web_pages(
     kernel: MinHashKernel | None = None,
     id_mode: str = "hash",  # xxhash64(url) — web-scale deterministic ids
     check_false_positive: bool = False,
-    band_edges_mode: str = "salted",
 ) -> WebDedupResult:
     """Raw input-hint table -> extraction -> MinHash dedup on the extracted
     text. ``id_mode="hash"`` derives ids from the url (no global sort);
     ``"order"`` gives reference-style 0..n-1 ordinals (test scale only).
-    ``band_edges_mode`` defaults to ``"salted"`` here — this entry point IS
-    the web-scale flow, where exact-duplicate boilerplate makes hot bands
-    the expected case, not the exception (operators.minhash docstrings)."""
+    Runs the salted (scale-profile) forms: this entry point IS the
+    web-scale flow, where exact-duplicate boilerplate makes hot bands the
+    expected case, not the exception (operators.minhash docstrings)."""
     kernel = kernel or MinHashKernel(num_perm=128, ngram_size=2, min_length=5, threshold=0.5)
     extracted = extract_stage(df)
     with_ids = assign_ids(extracted, order_by="url", mode=id_mode)
@@ -63,6 +62,6 @@ def dedup_web_pages(
         text_col="extracted_text",
         id_col=INDEX_COL,
         check_false_positive=check_false_positive,
-        band_edges_mode=band_edges_mode,
+        band_edges_mode="salted",
     )
     return WebDedupResult(extracted=extracted, dedup=res)
