@@ -365,3 +365,46 @@ output_table = "dedup_out_tbl"
         got = spark.table("dedup_out_tbl").count()
         assert got == summary["rows_after"]
         spark.sql("DROP TABLE dedup_out_tbl")
+
+    def test_output_table_saved_from_written_data(self, spark, input_parquet, tmp_path):
+        """The table holds the ``data`` output, and saving it reads that
+        output back instead of running the dedup plan a second time: the
+        same number of executions run the fingerprint UDF (or scan its
+        cache) with and without ``output_table``."""
+        store = spark._jsparkSession.sharedState().statusStore()
+
+        def last_execution_id() -> int:
+            execs = store.executionsList()
+            return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+
+        def plans_since(last_id: int) -> list[str]:
+            # newest first; ids ascend, and old entries may have been evicted
+            execs, plans = store.executionsList(), []
+            for i in range(execs.size() - 1, -1, -1):
+                if execs.apply(i).executionId() <= last_id:
+                    break
+                plans.append(execs.apply(i).physicalPlanDescription())
+            return plans
+
+        def dedup_plan_runs(extra_output: str, tag: str) -> int:
+            cfgp = write_config(
+                tmp_path,
+                input_parquet,
+                'algorithm_name = "minhash"\nnum_perm = 64\nngram_size = 2\nthreshold = 0.5',
+                str(tmp_path / f"out_{tag}"),
+                extra_output=extra_output,
+            )
+            last_id = last_execution_id()
+            run_pipeline(load_config(cfgp), spark=spark)
+            plans = plans_since(last_id)
+            return sum("ArrowEvalPython" in p or "InMemoryTableScan" in p for p in plans)
+
+        try:
+            with_table = dedup_plan_runs('output_table = "dedup_minhash_tbl"', "tbl")
+            assert with_table == dedup_plan_runs("", "plain") > 0
+            table = spark.table("dedup_minhash_tbl")
+            data = spark.read.parquet(str(tmp_path / "out_tbl/data"))
+            assert table.columns == data.columns
+            assert sorted(table.collect()) == sorted(data.collect())
+        finally:
+            spark.sql("DROP TABLE IF EXISTS dedup_minhash_tbl")

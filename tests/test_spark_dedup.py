@@ -1,5 +1,7 @@
 """Spark pipeline parity tests vs single-node reference-semantics oracles."""
 
+import itertools
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -220,19 +222,23 @@ class TestSaltedBandEdges:
                     corpus_texts, kernel, check_false_positive=check_fp
                 )
                 labels = {}
-                for mode in ("window", "salted"):
+                # band_partitions pre-partitions the exploded bands on each
+                # form's own band-group key
+                for form in itertools.product(("window", "salted"), (None, 3)):
+                    mode, band_partitions = form
                     res = minhash_dedup(
-                        df, kernel, check_false_positive=check_fp, band_edges_mode=mode
+                        df, kernel, check_false_positive=check_fp, band_edges_mode=mode,
+                        band_partitions=band_partitions,
                     )
                     got_kept = sorted(r[INDEX_COL] for r in res.kept.select(INDEX_COL).collect())
-                    assert got_kept == expected_kept, mode
-                    labels[mode] = {
+                    assert got_kept == expected_kept, form
+                    labels[form] = {
                         r[INDEX_COL]: r[CLUSTER_COL]
                         for r in res.docs.select(INDEX_COL, CLUSTER_COL).collect()
                     }
-                    for idx, c in labels[mode].items():
-                        assert expected_parents.get(idx, idx) == c, f"{mode} doc {idx}"
-                assert labels["window"] == labels["salted"]
+                    for idx, c in labels[form].items():
+                        assert expected_parents.get(idx, idx) == c, f"{form} doc {idx}"
+                assert all(got == labels["window", None] for got in labels.values())
         finally:
             flood_df.unpersist()
 

@@ -23,7 +23,6 @@ def jaccard_pairs_prefix(
     threshold: float,
     id_col: str = "doc_id",
     grams_col: str = "grams",
-    eager: bool = True,
     max_gram_df: int | None = None,
     observation=None,
 ) -> DataFrame:
@@ -31,12 +30,10 @@ def jaccard_pairs_prefix(
     (a_id, b_id, inter_size, union_size) for pairs with
     inter/union >= threshold — byte-identical to the naive all-pairs join.
 
-    ``eager=True`` (default) materializes the qualifying pairs via
-    localCheckpoint and releases the cached gram arrays immediately — right
-    when the threshold keeps the output near-linear (the operator's intended
-    regime) and callers consume the result. ``eager=False`` keeps the plan
-    lazy for composition (e.g. a downstream ``.limit``) at the cost of the
-    gram and prefix caches staying pinned until the session drops them.
+    The qualifying pairs come back materialized (``localCheckpoint``), and
+    the gram and prefix caches the join persisted are released before the
+    call returns: the threshold keeps the output near-linear (the
+    operator's intended regime), and no cache outlives the call.
 
     ``max_gram_df`` (default OFF — parity/lossless by default, matching the
     repo's cap convention): drop grams whose document frequency exceeds the
@@ -219,12 +216,11 @@ def jaccard_pairs_prefix(
         .distinct()
     )
     # materialize (the qualifying-pair output is small by construction:
-    # near-dup pairs only), then release the cached gram arrays — a long
-    # session would otherwise accumulate one pinned `sized` per call
-    if eager:
-        result = result.localCheckpoint(eager=True)
-        cache.unpersist()
-        prefix.unpersist()
+    # near-dup pairs only), then release both caches — a long session
+    # would otherwise accumulate pinned gram arrays and prefixes per call
+    result = result.localCheckpoint(eager=True)
+    cache.unpersist()
+    prefix.unpersist()
     return result
 
 

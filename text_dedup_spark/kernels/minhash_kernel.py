@@ -9,10 +9,11 @@ independent).
 
 Two implementations of the same math:
 - native (``minhash_native.c``) for the xxh3 configs with a 32-bit base
-  hash (hash_bits 64/32): ``band_keys_batch`` hands C one buffer of
-  space-joined tokens per batch, and C hashes each n-gram in place, then
-  permutes, takes minima and mixes band keys — no per-shingle Python
-  object; ``embed_batch_bandhash`` does the same from pre-built shingles;
+  hash (hash_bits 64/32): ``band_keys_batch`` hands C one buffer per batch
+  (raw text for all-ASCII docs, which C tokenizes; space-joined tokens for
+  the rest), and C hashes each n-gram in place, then permutes, takes minima
+  and mixes band keys — no per-shingle Python object;
+  ``embed_batch_bandhash`` does the same from pre-built shingles;
 - the spec path — per-doc ``signature`` (scalar hash, definitional
   ``%``) and the numpy ``_signature_from_hashes`` over batch hashes —
   which serves every other config, is the fallback when no compiler is
@@ -299,15 +300,21 @@ class MinHashKernel:
         """The fingerprint UDF's body: per raw text (None reads as ""), its
         ``embed_batch_bandhash`` band keys, or None when it has fewer than
         ``min_length`` tokens (reference ``minhash.py:23-28``). Natively,
-        Python only tokenizes — one space-joined token buffer per doc, one
-        concatenated buffer per batch — and C forms, hashes and permutes
-        the n-grams."""
+        one concatenated buffer per batch goes to C, which forms, hashes and
+        permutes the n-grams: an all-ASCII doc (``str.isascii``, O(1))
+        enters as its raw bytes and C tokenizes it (exact, see
+        ``tokenization``); any other doc enters as its ``joined_tokens``.
+        The choice is per doc, since web batches mix both."""
         texts = [c if c is not None else "" for c in contents]
         native = self._native_args()
         if native is not None:
-            buf, offsets = minhash_native.pack([joined_tokens(t) for t in texts])
+            is_ascii = [t.isascii() for t in texts]
+            buf, offsets = minhash_native.pack(
+                [t.encode() if a else joined_tokens(t) for t, a in zip(texts, is_ascii)]
+            )
             keys, valid = minhash_native.minhash_bands(
-                buf, offsets, self.ngram_size, self.min_length, **native
+                buf, offsets, np.array(is_ascii, dtype=np.uint8),
+                self.ngram_size, self.min_length, **native,
             )
             return [k if ok else None for k, ok in zip(keys, valid, strict=True)]
         token_lists = [tokenize(t) for t in texts]

@@ -16,6 +16,12 @@
  * key is sum_k sig[i*rows+k] * M^(rows-1-k) mod 2^64, M = 0x9E3779B97F4A7C15
  * (BAND_MIX_MULT).
  *
+ * Tokenizing ASCII docs: the reference lowercases and splits on the Unicode
+ * regex \W. Over ASCII, str.lower changes only A-Z and \w is exactly
+ * [0-9A-Za-z_], so C tokenizes a doc whose text is all ASCII itself
+ * (ascii_join_tokens); every other doc arrives already tokenized by
+ * tokenization.joined_tokens.
+ *
  * Compiled on demand by native.py (cc -O3 -march=native -shared -fPIC,
  * -O2 retry). Little-endian hosts only; elsewhere the build fails and the
  * callers take the pure-Python fallback.
@@ -285,67 +291,111 @@ static inline void sig_bands(const sig_state *st, int64_t *out) {
     }
 }
 
+/* [0-9A-Za-z_]: over ASCII, exactly the Unicode \w of the reference's
+ * regex tokenizer (tokenization.py) */
+static inline int ascii_word(uint8_t c) {
+    return (c >= '0' && c <= '9') || (c >= 'a' && c <= 'z') ||
+           (c >= 'A' && c <= 'Z') || c == '_';
+}
+
+/* Tokenize raw ASCII text p[0:len) the way tokenization.joined_tokens does
+ * (lowercase, split on non-word bytes, drop empty tokens, join with single
+ * spaces) into out, which must hold len bytes; returns the bytes written. */
+static size_t ascii_join_tokens(const uint8_t *p, size_t len, uint8_t *out) {
+    size_t o = 0;
+    for (size_t i = 0; i < len;) {
+        while (i < len && !ascii_word(p[i])) i++;
+        if (i == len) break;
+        if (o) out[o++] = ' ';
+        for (; i < len && ascii_word(p[i]); i++)
+            out[o++] = (p[i] >= 'A' && p[i] <= 'Z') ? p[i] | 0x20 : p[i];
+    }
+    return o;
+}
+
+/* One doc's band keys from its space-joined token buffer p[0:len). */
+static void doc_bands(sig_state *st, const uint8_t *p, size_t len,
+                      int64_t ngram, int64_t min_length, size_t *ring,
+                      int64_t *out, uint8_t *valid) {
+    size_t first = len, last = 0; /* [first, last): tokens, trimmed */
+    int64_t n_tok = 0;
+    for (size_t i = 0; i < len;) {
+        while (i < len && p[i] == ' ') i++;
+        if (i == len) break;
+        if (!n_tok) first = i;
+        while (i < len && p[i] != ' ') i++;
+        last = i;
+        n_tok++;
+    }
+    if (n_tok < min_length) {
+        *valid = 0;
+        memset(out, 0, sizeof(int64_t) * (size_t)st->bands);
+        return;
+    }
+    *valid = 1;
+    sig_reset(st);
+    if (ngram <= 0) {
+        /* no shingles: the all-max signature */
+    } else if (n_tok < ngram) {
+        /* one shingle: the whole doc (b"" when it has no tokens) */
+        sig_add(st, p + (n_tok ? first : 0), n_tok ? last - first : 0);
+    } else {
+        int64_t t = 0, slot = 0;
+        for (size_t i = first; i < last;) {
+            while (p[i] == ' ') i++;
+            ring[slot] = i;
+            while (i < last && p[i] != ' ') i++;
+            if (++slot == ngram) slot = 0;
+            /* ring[slot] now holds the start of token t - ngram + 1 */
+            if (++t >= ngram) sig_add(st, p + ring[slot], i - ring[slot]);
+        }
+    }
+    sig_bands(st, out);
+}
+
 /* Band keys straight from token buffers. Doc d is buf[doc_off[d]:
- * doc_off[d+1]]: its tokens separated by 0x20 (tokens never contain 0x20;
- * leading/trailing/repeated spaces are tolerated, but n-grams are taken as
- * contiguous byte ranges, so tokens must be separated by exactly one space).
- * Reference shingling (tokenization.ngrams): a doc with fewer than
- * min_length tokens gets valid[d] = 0 and no keys; fewer than ngram tokens
- * gives ONE shingle, all tokens joined (b"" for an empty doc); otherwise
- * every run of ngram consecutive tokens; ngram <= 0 gives no shingles.
- * out is int64[n_docs * bands]. Returns 0, or -1 on allocation failure. */
-int minhash_bands(const uint8_t *buf, const int64_t *doc_off, int64_t n_docs,
-                  int64_t ngram, int64_t min_length, uint64_t seed,
-                  int hash_bits, const uint64_t *a, const uint64_t *b,
-                  int64_t bands, int64_t rows, int64_t *out, uint8_t *valid) {
+ * doc_off[d+1]]. When ascii[d] is nonzero it is raw ASCII text, tokenized
+ * here by ascii_join_tokens; otherwise it is already its tokens separated
+ * by 0x20 (tokens never contain 0x20; leading/trailing/repeated spaces are
+ * tolerated, but n-grams are taken as contiguous byte ranges, so tokens
+ * must be separated by exactly one space). Reference shingling
+ * (tokenization.ngrams): a doc with fewer than min_length tokens gets
+ * valid[d] = 0 and no keys; fewer than ngram tokens gives ONE shingle, all
+ * tokens joined (b"" for an empty doc); otherwise every run of ngram
+ * consecutive tokens; ngram <= 0 gives no shingles. out is
+ * int64[n_docs * bands]. Returns 0, or -1 on allocation failure. */
+int minhash_bands(const uint8_t *buf, const int64_t *doc_off,
+                  const uint8_t *ascii, int64_t n_docs, int64_t ngram,
+                  int64_t min_length, uint64_t seed, int hash_bits,
+                  const uint64_t *a, const uint64_t *b, int64_t bands,
+                  int64_t rows, int64_t *out, uint8_t *valid) {
     sig_state st = {seed, hash_bits, a, b, bands, rows, bands * rows, NULL};
+    size_t scratch_len = 1;
+    for (int64_t d = 0; d < n_docs; d++) {
+        const size_t len = (size_t)(doc_off[d + 1] - doc_off[d]);
+        if (ascii[d] && len > scratch_len) scratch_len = len;
+    }
     st.sig = malloc(sizeof(uint64_t) * (size_t)(st.m ? st.m : 1));
     size_t *ring = malloc(sizeof(size_t) * (size_t)(ngram > 0 ? ngram : 1));
-    if (!st.sig || !ring) {
+    uint8_t *scratch = malloc(scratch_len);
+    if (!st.sig || !ring || !scratch) {
         free(st.sig);
         free(ring);
+        free(scratch);
         return -1;
     }
     for (int64_t d = 0; d < n_docs; d++) {
         const uint8_t *p = buf + doc_off[d];
-        const size_t len = (size_t)(doc_off[d + 1] - doc_off[d]);
-        size_t first = len, last = 0; /* [first, last): tokens, trimmed */
-        int64_t n_tok = 0;
-        for (size_t i = 0; i < len;) {
-            while (i < len && p[i] == ' ') i++;
-            if (i == len) break;
-            if (!n_tok) first = i;
-            while (i < len && p[i] != ' ') i++;
-            last = i;
-            n_tok++;
+        size_t len = (size_t)(doc_off[d + 1] - doc_off[d]);
+        if (ascii[d]) {
+            len = ascii_join_tokens(p, len, scratch);
+            p = scratch;
         }
-        if (n_tok < min_length) {
-            valid[d] = 0;
-            memset(out + d * bands, 0, sizeof(int64_t) * (size_t)bands);
-            continue;
-        }
-        valid[d] = 1;
-        sig_reset(&st);
-        if (ngram <= 0) {
-            /* no shingles: the all-max signature */
-        } else if (n_tok < ngram) {
-            /* one shingle: the whole doc (b"" when it has no tokens) */
-            sig_add(&st, p + (n_tok ? first : 0), n_tok ? last - first : 0);
-        } else {
-            int64_t t = 0, slot = 0;
-            for (size_t i = first; i < last;) {
-                while (p[i] == ' ') i++;
-                ring[slot] = i;
-                while (i < last && p[i] != ' ') i++;
-                if (++slot == ngram) slot = 0;
-                /* ring[slot] now holds the start of token t - ngram + 1 */
-                if (++t >= ngram) sig_add(&st, p + ring[slot], i - ring[slot]);
-            }
-        }
-        sig_bands(&st, out + d * bands);
+        doc_bands(&st, p, len, ngram, min_length, ring, out + d * bands, valid + d);
     }
     free(st.sig);
     free(ring);
+    free(scratch);
     return 0;
 }
 

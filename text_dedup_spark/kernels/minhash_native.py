@@ -2,12 +2,13 @@
 
 Three entry points over flat ``bytes`` buffers plus int64 offsets:
 ``xxh3_64_batch`` (one XXH3-64 per byte range), ``minhash_bands`` (band keys
-straight from space-joined token buffers: n-grams are hashed in place, no
-per-shingle Python object) and ``minhash_bands_items`` (band keys from
-pre-built shingles). Built and loaded on first use by :mod:`native`; when
-that fails, ``available()`` is False and callers take the pure-Python spec
-path (:mod:`xxh3` + ``MinHashKernel._signature_from_hashes``), which is also
-the oracle this kernel is cross-checked against in tests.
+straight from space-joined token buffers or raw ASCII text, which C
+tokenizes: n-grams are hashed in place, no per-shingle Python object) and
+``minhash_bands_items`` (band keys from pre-built shingles). Built and
+loaded on first use by :mod:`native`; when that fails, ``available()`` is
+False and callers take the pure-Python spec path (:mod:`xxh3` +
+``MinHashKernel._signature_from_hashes``), which is also the oracle this
+kernel is cross-checked against in tests.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ def _build_or_load() -> ctypes.CDLL:
     lib.xxh3_64_batch.argtypes = [_P, _P, _I64, ctypes.c_uint64, _P]
     lib.minhash_bands.restype = ctypes.c_int
     lib.minhash_bands.argtypes = [
-        _P, _P, _I64, _I64, _I64, ctypes.c_uint64, ctypes.c_int, _P, _P, _I64, _I64, _P, _P,
+        _P, _P, _P, _I64, _I64, _I64, ctypes.c_uint64, ctypes.c_int, _P, _P, _I64, _I64, _P, _P,
     ]
     lib.minhash_bands_items.restype = ctypes.c_int
     lib.minhash_bands_items.argtypes = [
@@ -99,21 +100,26 @@ def _check(rc: int) -> None:
 
 
 def minhash_bands(
-    buf: bytes, offsets: np.ndarray, ngram: int, min_length: int, seed: int,
-    hash_bits: int, a: np.ndarray, b: np.ndarray, bands: int, rows: int,
+    buf: bytes, offsets: np.ndarray, is_ascii: np.ndarray, ngram: int, min_length: int,
+    seed: int, hash_bits: int, a: np.ndarray, b: np.ndarray, bands: int, rows: int,
 ) -> tuple[np.ndarray, np.ndarray]:
     """(int64[n_docs, bands] band keys, bool[n_docs] valid) for the docs
-    ``buf[offsets[d]:offsets[d+1]]``, each its tokens joined by single
-    spaces; invalid (fewer than ``min_length`` tokens) rows are zero. ``a``
-    and ``b`` are the first ``bands * rows`` permutation coefficients as
-    uint64. Caller must have checked ``available()``."""
+    ``buf[offsets[d]:offsets[d+1]]``: where ``is_ascii[d]`` holds, the raw
+    ASCII text of the doc, tokenized in C; elsewhere its tokens joined by
+    single spaces (``tokenization.joined_tokens``). Invalid (fewer than
+    ``min_length`` tokens) rows are zero. ``a`` and ``b`` are the first
+    ``bands * rows`` permutation coefficients as uint64. Caller must have
+    checked ``available()``."""
     offsets = _checked_offsets(offsets, len(buf))
     a, b = _checked_coeffs(a, b, bands, rows, hash_bits)
     n = len(offsets) - 1
+    is_ascii = np.ascontiguousarray(is_ascii, dtype=np.uint8)
+    if len(is_ascii) != n:
+        raise ValueError(f"need one is_ascii flag per doc, got {len(is_ascii)} for {n} docs")
     out = np.empty((n, bands), dtype=np.int64)
     valid = np.empty(n, dtype=np.uint8)
     _check(_lib.minhash_bands(
-        buf, _ptr(offsets), n, ngram, min_length, seed & 0xFFFFFFFFFFFFFFFF,
+        buf, _ptr(offsets), _ptr(is_ascii), n, ngram, min_length, seed & 0xFFFFFFFFFFFFFFFF,
         hash_bits, _ptr(a), _ptr(b), bands, rows, _ptr(out), _ptr(valid),
     ))
     return out, valid.view(bool)

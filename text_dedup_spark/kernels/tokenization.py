@@ -8,6 +8,17 @@ Parity notes (SURVEY.md §7.9): tokenization MUST use the Python ``regex``
 module's Unicode ``\\W`` — JVM regex (`pyspark.sql.functions.split`) has
 different Unicode word-character classes, so all tokenizing happens inside
 Python/pandas UDFs, never JVM-side.
+
+One exact shortcut: over ASCII text (``str.isascii()``, O(1) in CPython)
+``str.lower`` changes only ``A-Z`` (to ``a-z``), and the Unicode ``\\w`` is
+exactly ``[0-9A-Za-z_]`` — every other ASCII code point is a separator
+(checked on all 128 in tests/test_minhash_native.py). So ``tokenize`` of an
+ASCII doc is: lowercase ``A-Z``, split on every byte outside
+``[0-9A-Za-z_]``, drop empty tokens — a byte loop with no Unicode tables,
+which the native MinHash kernel (minhash_native.c, ``ascii_join_tokens``)
+runs on the raw bytes of each all-ASCII doc instead of ``joined_tokens``.
+Any doc with a non-ASCII character takes the regex, whose Unicode classes
+and case mappings a byte loop cannot reproduce.
 """
 
 from __future__ import annotations

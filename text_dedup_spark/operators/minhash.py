@@ -140,6 +140,12 @@ def minhash_fingerprint(df: DataFrame, kernel: MinHashKernel, text_col: str = "t
     return _explode_bands(bands.where(F.col("__BANDS__").isNotNull()), kernel)
 
 
+def _band_group_key():
+    """The window star edges' band-group key: one int64 per (band index,
+    band key)."""
+    return F.xxhash64("__band_idx__", "__band_val__")
+
+
 def lsh_star_edges(exploded: DataFrame) -> DataFrame:
     """Band groups -> star edges (band-min-id, member-id) in ONE shuffle: a
     min-over-band window replaces the former groupBy + join-back pair, which
@@ -151,11 +157,19 @@ def lsh_star_edges(exploded: DataFrame) -> DataFrame:
     count filter is needed). Edge set identical to the reference's all-pairs
     band join (J1) through connected components, linear in band-group size.
 
+    The window is keyed on ONE int64, ``_band_group_key()`` (xxhash64 of the
+    band index and key; a collision merges two band groups with p ~= 2**-64,
+    the same risk class as the band keys themselves): a single long sort key
+    is fully covered by the sort prefix, so Spark radix-sorts it; a
+    (band index, band key) sort's prefix holds only the few band-index
+    values, so nearly every comparison would tie on it and fall back to the
+    full row comparator.
+
     No distinct: connected_components dedups its input, so an extra shuffle
     here would be pure overhead."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy("__band_idx__", "__band_val__")
+    w = Window.partitionBy(_band_group_key())
     return (
         exploded.withColumn("__root__", F.min(INDEX_COL).over(w))
         .where(F.col(INDEX_COL) != F.col("__root__"))
@@ -566,13 +580,16 @@ def minhash_dedup(
             )
     exploded = _explode_bands(rep_rows, kernel)
     if band_partitions:
-        # pre-partition on the band keys: satisfies the window's required
-        # clustering and the salted groupBy's distribution (the join-back
-        # probe shares it), so no second exchange, while pinning the sort
-        # width
-        exploded = exploded.repartition(
-            band_partitions, "__band_idx__", "__band_val__"
+        # pre-partition on the band-group key of the form that runs: it
+        # satisfies the window's required clustering or the salted groupBy's
+        # distribution (the join-back probe shares it), so no second
+        # exchange, while pinning the sort width
+        keys = (
+            [_band_group_key()]
+            if band_edges_mode == "window"
+            else ["__band_idx__", "__band_val__"]
         )
+        exploded = exploded.repartition(band_partitions, *keys)
     if band_edges_mode == "salted":
         edges = lsh_star_edges_salted(exploded)
         if contraction_edges is not None:

@@ -414,7 +414,11 @@ def run_pipeline(config: Config, spark: SparkSession | None = None) -> dict:
         "overwrite"
     ).parquet(str(out / "data"))
     if config.output.output_table:
-        final_out.write.mode("overwrite").saveAsTable(config.output.output_table)
+        # from the data just written: the lazy final_out would run the
+        # whole dedup plan a second time
+        spark.read.parquet(str(out / "data")).write.mode("overwrite").saveAsTable(
+            config.output.output_table
+        )
     if config.output.save_clusters and clusters is not None:
         clusters.write.mode("overwrite").parquet(str(out / "clusters"))
         # small-scale compatibility export of the reference's clusters.pickle

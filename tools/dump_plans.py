@@ -68,11 +68,12 @@ def _minhash_salted_edges(spark, sf_dir):
 
 
 def _setsim_prefix_plan(spark, sf_dir):
-    """The ngram_jaccard_pairs entry materializes through localCheckpoint
-    (its plan dump is an opaque ExistingRDD scan), so dump the LAZY form:
-    what to verify is (a) the gram build evaluated once above the cache —
-    the sz>0 filter must scan the InMemoryRelation, NOT re-derive the
-    ngram expression under the exchange (the round-5 pushdown fix,
+    """jaccard_pairs_prefix returns its pairs materialized through
+    localCheckpoint (a plan dump of the result is an opaque ExistingRDD
+    scan), so this returns the plan of the execution that materialized
+    them: what to verify is (a) the gram build evaluated once above the
+    cache — the sz>0 filter must scan the InMemoryRelation, NOT re-derive
+    the ngram expression under the exchange (the round-5 pushdown fix,
     functions/setsim.py) — and (b) no cross join anywhere in the prefix
     candidate join."""
     from pyspark.sql import functions as F
@@ -88,7 +89,9 @@ def _setsim_prefix_plan(spark, sf_dir):
             F.col("doc_id"), word_ngrams_from_tokens(F.col("toks"), 3).alias("grams")
         )
     )
-    return jaccard_pairs_prefix(d, threshold=0.5, id_col="doc_id", eager=False)
+    jaccard_pairs_prefix(d, threshold=0.5, id_col="doc_id")
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return executions.apply(executions.size() - 1).physicalPlanDescription()
 
 
 EXTRA_QUERIES = [
@@ -98,8 +101,8 @@ EXTRA_QUERIES = [
         _embedding_lsh_edges,
     ),
     (
-        "setsim_prefix_lazy",
-        "PPJoin lazy form: gram cache scanned (filter NOT pushed into the ngram expr), prefix join, exact verify",
+        "setsim_prefix_materialized",
+        "PPJoin as materialized: gram cache scanned (filter NOT pushed into the ngram expr), prefix join, exact verify",
         _setsim_prefix_plan,
     ),
     (
@@ -133,7 +136,7 @@ def main() -> None:
     builders += EXTRA_QUERIES
     for name, note, fn in builders:
         df = fn(spark, "/root/testdata/sf0.01")
-        plan = df._jdf.queryExecution().explainString(mode)
+        plan = df if isinstance(df, str) else df._jdf.queryExecution().explainString(mode)
         out.append(f"## {name} — {note}\n\n```\n{plan.strip()}\n```\n")
     with open("/root/repo/PLANS.md", "w") as f:
         f.write("\n".join(out))
