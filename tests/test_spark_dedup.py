@@ -222,8 +222,8 @@ class TestSaltedBandEdges:
                     corpus_texts, kernel, check_false_positive=check_fp
                 )
                 labels = {}
-                # band_partitions pre-partitions the exploded bands on each
-                # form's own band-group key
+                # band_partitions pre-partitions the exploded bands on the
+                # band keys, which each form's exchange must reuse
                 for form in itertools.product(("window", "salted"), (None, 3)):
                     mode, band_partitions = form
                     res = minhash_dedup(

@@ -45,6 +45,30 @@ def jaccard_pairs_prefix(
     a false pair. Observable, never silent: pass a
     ``pyspark.sql.Observation`` to read ``n_hot_grams`` /
     ``n_hot_postings`` after an action."""
+    result, caches = _prefix_join(
+        grams_df, threshold, id_col, grams_col, max_gram_df, observation
+    )
+    # materialize (the qualifying-pair output is small by construction:
+    # near-dup pairs only), then release both caches — a long session
+    # would otherwise accumulate pinned gram arrays and prefixes per call
+    try:
+        return result.localCheckpoint(eager=True)
+    finally:
+        for c in caches:
+            c.unpersist()
+
+
+def _prefix_join(
+    grams_df: DataFrame,
+    threshold: float,
+    id_col: str,
+    grams_col: str,
+    max_gram_df: int | None,
+    observation,
+) -> tuple[DataFrame, tuple[DataFrame, DataFrame]]:
+    """``jaccard_pairs_prefix``'s lazy plan: the qualifying pairs, and the
+    gram and prefix caches it persists (not yet materialized), which the
+    caller releases."""
     # persisted: consumed by the postings index AND both sides of the
     # verification join — without it the gram arrays are recomputed 3x.
     # The sz>0 filter sits ON TOP of the cache, not inside it: below the
@@ -215,13 +239,7 @@ def jaccard_pairs_prefix(
         # the pre-verification distinct produced
         .distinct()
     )
-    # materialize (the qualifying-pair output is small by construction:
-    # near-dup pairs only), then release both caches — a long session
-    # would otherwise accumulate pinned gram arrays and prefixes per call
-    result = result.localCheckpoint(eager=True)
-    cache.unpersist()
-    prefix.unpersist()
-    return result
+    return result, (cache, prefix)
 
 
 def _as_fraction(threshold: float, max_den: int = 1_000_000) -> tuple[int, int]:

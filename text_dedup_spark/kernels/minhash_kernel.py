@@ -304,7 +304,8 @@ class MinHashKernel:
         permutes the n-grams: an all-ASCII doc (``str.isascii``, O(1))
         enters as its raw bytes and C tokenizes it (exact, see
         ``tokenization``); any other doc enters as its ``joined_tokens``.
-        The choice is per doc, since web batches mix both."""
+        The choice is per doc: a doc's keys depend only on its own text, so
+        one non-ASCII doc leaves the rest of its batch on the C path."""
         texts = [c if c is not None else "" for c in contents]
         native = self._native_args()
         if native is not None:

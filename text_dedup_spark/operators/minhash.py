@@ -140,12 +140,6 @@ def minhash_fingerprint(df: DataFrame, kernel: MinHashKernel, text_col: str = "t
     return _explode_bands(bands.where(F.col("__BANDS__").isNotNull()), kernel)
 
 
-def _band_group_key():
-    """The window star edges' band-group key: one int64 per (band index,
-    band key)."""
-    return F.xxhash64("__band_idx__", "__band_val__")
-
-
 def lsh_star_edges(exploded: DataFrame) -> DataFrame:
     """Band groups -> star edges (band-min-id, member-id) in ONE shuffle: a
     min-over-band window replaces the former groupBy + join-back pair, which
@@ -157,19 +151,21 @@ def lsh_star_edges(exploded: DataFrame) -> DataFrame:
     count filter is needed). Edge set identical to the reference's all-pairs
     band join (J1) through connected components, linear in band-group size.
 
-    The window is keyed on ONE int64, ``_band_group_key()`` (xxhash64 of the
-    band index and key; a collision merges two band groups with p ~= 2**-64,
-    the same risk class as the band keys themselves): a single long sort key
-    is fully covered by the sort prefix, so Spark radix-sorts it; a
-    (band index, band key) sort's prefix holds only the few band-index
-    values, so nearly every comparison would tie on it and fall back to the
-    full row comparator.
+    The window partitions on (band key, band index), in that order: the
+    sort's prefix is taken from the first column, and the int64 band key
+    fills it, so comparisons tie on the prefix (and fall back to the full
+    row comparator) only between members of one band group. Band index
+    first puts only the few band-index values in the prefix, so nearly
+    every comparison ties. A hashed one-column key would also allow radix
+    sort, but it pools every band's groups in one 64-bit space: its false
+    merges would come on top of the band keys' own, at about ``bands``
+    times their rate.
 
     No distinct: connected_components dedups its input, so an extra shuffle
     here would be pure overhead."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(_band_group_key())
+    w = Window.partitionBy("__band_val__", "__band_idx__")
     return (
         exploded.withColumn("__root__", F.min(INDEX_COL).over(w))
         .where(F.col(INDEX_COL) != F.col("__root__"))
@@ -580,16 +576,13 @@ def minhash_dedup(
             )
     exploded = _explode_bands(rep_rows, kernel)
     if band_partitions:
-        # pre-partition on the band-group key of the form that runs: it
-        # satisfies the window's required clustering or the salted groupBy's
-        # distribution (the join-back probe shares it), so no second
-        # exchange, while pinning the sort width
-        keys = (
-            [_band_group_key()]
-            if band_edges_mode == "window"
-            else ["__band_idx__", "__band_val__"]
+        # pre-partition on the band keys: satisfies the window's required
+        # clustering and the salted groupBy's distribution (the join-back
+        # probe shares it), so no second exchange, while pinning the sort
+        # width
+        exploded = exploded.repartition(
+            band_partitions, "__band_idx__", "__band_val__"
         )
-        exploded = exploded.repartition(band_partitions, *keys)
     if band_edges_mode == "salted":
         edges = lsh_star_edges_salted(exploded)
         if contraction_edges is not None:

@@ -68,17 +68,17 @@ def _minhash_salted_edges(spark, sf_dir):
 
 
 def _setsim_prefix_plan(spark, sf_dir):
-    """jaccard_pairs_prefix returns its pairs materialized through
-    localCheckpoint (a plan dump of the result is an opaque ExistingRDD
-    scan), so this returns the plan of the execution that materialized
-    them: what to verify is (a) the gram build evaluated once above the
-    cache — the sz>0 filter must scan the InMemoryRelation, NOT re-derive
-    the ngram expression under the exchange (the round-5 pushdown fix,
-    functions/setsim.py) — and (b) no cross join anywhere in the prefix
-    candidate join."""
+    """The ngram_jaccard_pairs entry materializes through localCheckpoint
+    (its plan dump is an opaque ExistingRDD scan), so dump the lazy plan
+    jaccard_pairs_prefix checkpoints: what to verify is (a) the gram build
+    evaluated once above the cache — the sz>0 filter must scan the
+    InMemoryRelation, NOT re-derive the ngram expression under the exchange
+    (the round-5 pushdown fix, functions/setsim.py) — and (b) no cross join
+    anywhere in the prefix candidate join. Its two caches are registered but
+    never materialized; they go with the session."""
     from pyspark.sql import functions as F
 
-    from text_dedup_spark.functions.setsim import jaccard_pairs_prefix
+    from text_dedup_spark.functions.setsim import _prefix_join
     from text_dedup_spark.functions.text_stats import word_ngrams_from_tokens
 
     d = (
@@ -89,9 +89,8 @@ def _setsim_prefix_plan(spark, sf_dir):
             F.col("doc_id"), word_ngrams_from_tokens(F.col("toks"), 3).alias("grams")
         )
     )
-    jaccard_pairs_prefix(d, threshold=0.5, id_col="doc_id")
-    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
-    return executions.apply(executions.size() - 1).physicalPlanDescription()
+    pairs, _caches = _prefix_join(d, 0.5, "doc_id", "grams", None, None)
+    return pairs
 
 
 EXTRA_QUERIES = [
@@ -101,8 +100,8 @@ EXTRA_QUERIES = [
         _embedding_lsh_edges,
     ),
     (
-        "setsim_prefix_materialized",
-        "PPJoin as materialized: gram cache scanned (filter NOT pushed into the ngram expr), prefix join, exact verify",
+        "setsim_prefix_lazy",
+        "PPJoin lazy form: gram cache scanned (filter NOT pushed into the ngram expr), prefix join, exact verify",
         _setsim_prefix_plan,
     ),
     (
@@ -136,7 +135,7 @@ def main() -> None:
     builders += EXTRA_QUERIES
     for name, note, fn in builders:
         df = fn(spark, "/root/testdata/sf0.01")
-        plan = df if isinstance(df, str) else df._jdf.queryExecution().explainString(mode)
+        plan = df._jdf.queryExecution().explainString(mode)
         out.append(f"## {name} — {note}\n\n```\n{plan.strip()}\n```\n")
     with open("/root/repo/PLANS.md", "w") as f:
         f.write("\n".join(out))
