@@ -696,17 +696,18 @@ def q_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_suffix_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring dedup (reference suffix_array.py; S6, X1-X3, P6-P7).
 
-    Size-based physical planning (suffix_array_dedup_auto): small corpora
-    take the 2-stage global pass, large ones the winnowing-anchored lossless
-    grouping (every duplicated range >= threshold co-locates its docs, so
-    per-group exact suffix-array passes reproduce the global result —
-    tested equal, and DuckDB-oracled here via a duplicated-50-gram coverage
-    construction). length_threshold=50 so the synthetic docs exercise
-    removals; returns the per-doc byte shrinkage."""
-    from text_dedup_spark.operators.suffix_dedup import suffix_array_dedup_auto
+    ``suffix_array_dedup`` groups by corpus size: corpora under its byte
+    gate are one group in a 2-stage plan (sf0.01's 500 docs, ~149 KB),
+    larger ones winnowing-anchor groups (every duplicated range >=
+    threshold co-locates its docs, so per-group exact suffix-array passes
+    reproduce the one-group result — tested equal, and DuckDB-oracled here
+    via a duplicated-50-gram coverage construction). length_threshold=50
+    so the synthetic docs exercise removals; returns the per-doc byte
+    shrinkage."""
+    from text_dedup_spark.operators.suffix_dedup import suffix_array_dedup
 
     d = _docs(spark, sf_dir).select("doc_id", "text")
-    res = suffix_array_dedup_auto(
+    res = suffix_array_dedup(
         d, text_col="text", id_col="doc_id", length_threshold=50
     )
     orig = d.select("doc_id", F.length(F.encode("text", "utf-8")).alias("orig_bytes"))

@@ -2,11 +2,17 @@
 
 import numpy as np
 import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from text_dedup_spark.kernels.intervals import clean_up, restore_and_merge
 from text_dedup_spark.kernels.suffix_array_kernel import duplicate_byte_ranges
+from text_dedup_spark.operators import suffix_dedup as sd
 from text_dedup_spark.operators.suffix_dedup import suffix_array_dedup
+
+# gate values that force each grouping through the module constant
+ONE_GROUP = 1 << 62
+ANCHORED = 0
 
 
 def make_corpus(seed: int = 5, n: int = 120):
@@ -28,8 +34,56 @@ def make_corpus(seed: int = 5, n: int = 120):
     return texts
 
 
+def tagged_corpus(seed: int, n: int, threshold: int):
+    """Random docs with no duplicate that can span a doc boundary.
+
+    Bodies mix ASCII, accented and CJK words plus shared chunks planted
+    above and below the threshold; some docs are None, empty, or shorter
+    than the threshold. Every other doc starts and ends with its own tag of
+    >= threshold bytes. Tags and short docs are Hangul syllables, which
+    occur nowhere else and never twice, so any range of >= 5 bytes that
+    crosses a doc boundary holds a whole unique syllable and cannot be
+    duplicated. (At threshold 1 coverage is per byte: a byte is removed iff
+    its value occurs twice, which every grouping sees alike.)"""
+    rng = np.random.RandomState(seed)
+    syllables = iter(rng.permutation(11172) + 0xAC00)
+
+    def hangul(n_syllables):  # 3 UTF-8 bytes each
+        return "".join(chr(next(syllables)) for _ in range(n_syllables))
+
+    tag_syllables = -(-threshold // 3)
+
+    words = (
+        [f"w{i}" for i in range(60)]
+        + ["café", "naïve", "über", "façade", "Ångström", "jalapeño", "crème"]
+        + ["数据", "去重", "后缀", "数组", "文本", "重复", "字符串", "东京"]
+    )
+
+    def body(n_words):
+        return " ".join(words[i] for i in rng.randint(0, len(words), size=n_words))
+
+    chunks = [body(k) for k in (3, 8, 20, 45)]
+    texts = []
+    for i in range(n):
+        kind = i % 10
+        if kind == 0:
+            texts.append(None)
+        elif kind == 1:
+            texts.append("")
+        elif kind == 2 and threshold > 3:
+            texts.append(hangul(min(threshold - 1, 12) // 3))  # < threshold bytes
+        else:
+            parts = [body(rng.randint(5, 40))]
+            for c in chunks:
+                if rng.rand() < 0.3:
+                    parts.insert(rng.randint(0, len(parts) + 1), c)
+            tag, end_tag = hangul(tag_syllables), hangul(tag_syllables)
+            texts.append(tag + " ".join(parts) + end_tag)
+    return texts
+
+
 def oracle(texts, k=100, strategy="longest"):
-    encoded = [t.encode("utf-8") for t in texts]
+    encoded = [(t or "").encode("utf-8") for t in texts]
     boundaries = []
     start = 0
     for b in encoded:
@@ -37,16 +91,33 @@ def oracle(texts, k=100, strategy="longest"):
         start += len(b)
     ranges = duplicate_byte_ranges(b"".join(encoded), k)
     slices, _ = restore_and_merge(boundaries, ranges, k, strategy)
-    return [clean_up(t, sl) for t, sl in zip(texts, slices, strict=True)]
+    return [clean_up(t or "", sl) for t, sl in zip(texts, slices, strict=True)]
+
+
+def to_df(spark, texts):
+    return spark.createDataFrame(
+        list(enumerate(texts)), "__INDEX__ long, text string"
+    )
+
+
+def rewritten(monkeypatch, df, gate, **kwargs):
+    """Run the operator with the one-group gate forced to ``gate``; return
+    ({id: text}, result)."""
+    with monkeypatch.context() as m:
+        m.setattr(sd, "ONE_GROUP_BYTES", gate)
+        res = suffix_array_dedup(df, **kwargs)
+    return {r["__INDEX__"]: r["text"] for r in res.docs.collect()}, res
+
+
+def text_bytes(df):
+    return df.select(F.sum(F.length(F.encode("text", "utf-8")))).first()[0]
 
 
 @pytest.mark.parametrize("strategy", ["longest", "overlapping"])
 def test_matches_oracle(spark, strategy):
     texts = make_corpus()
     expected = oracle(texts, 100, strategy)
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], ["__INDEX__", "text"]
-    )
+    df = to_df(spark, texts)
     res = suffix_array_dedup(df, length_threshold=100, merge_strategy=strategy)
     got = {r["__INDEX__"]: r["text"] for r in res.docs.collect()}
     for i, exp in enumerate(expected):
@@ -73,17 +144,49 @@ def test_identical_docs_fully_removed(spark):
     assert {r["__INDEX__"] for r in res.kept.collect()} == {2}
 
 
+@pytest.mark.parametrize("strategy", ["longest", "overlapping"])
+def test_groupings_differential(spark, monkeypatch, strategy):
+    """One group = anchored groups = anchored groups through the split
+    path with a cap no group exceeds = the single-node oracle, on a corpus
+    with multi-byte text, None/empty/short docs and no boundary-spanning
+    duplicate."""
+    texts = tagged_corpus(seed=3, n=60, threshold=30)
+    expected = dict(enumerate(oracle(texts, 30, strategy)))
+    assert any(e != (t or "") for e, t in zip(expected.values(), texts))
+    df = to_df(spark, texts)
+    kw = dict(length_threshold=30, merge_strategy=strategy)
+    one, _ = rewritten(monkeypatch, df, ONE_GROUP, **kw)
+    anchored, _ = rewritten(monkeypatch, df, ANCHORED, **kw)
+    obs = Observation(f"sfx_differential_{strategy}")
+    split, _ = rewritten(
+        monkeypatch, df, ANCHORED, max_group_bytes=text_bytes(df),
+        observation=obs, **kw,
+    )
+    assert one == expected
+    assert anchored == expected
+    assert split == expected
+    assert obs.get["n_groups_split"] == 0
+
+
+@pytest.mark.parametrize("threshold", [1, 5, 7, 8, 50, 100])
+def test_groupings_agree_across_thresholds(spark, monkeypatch, threshold):
+    """The anchored window stays valid below 8 bytes (w + W - 1 == t with
+    w, W >= 1), and both groupings give the oracle's output."""
+    texts = tagged_corpus(seed=threshold, n=30, threshold=threshold)
+    expected = dict(enumerate(oracle(texts, threshold)))
+    df = to_df(spark, texts)
+    one, _ = rewritten(monkeypatch, df, ONE_GROUP, length_threshold=threshold)
+    anchored, _ = rewritten(monkeypatch, df, ANCHORED, length_threshold=threshold)
+    assert one == expected
+    assert anchored == expected
+
+
 class TestAnchoredGrouping:
-    """Winnowing-anchor grouping must reproduce the global single-group
-    result exactly (content duplicates are always co-grouped; boundary-
-    spanning concat artifacts are absent from this fixture by construction)."""
+    """Winnowing-anchor grouping must reproduce the one-group result exactly
+    (content duplicates are always co-grouped; boundary-spanning concat
+    artifacts are absent from this fixture by construction)."""
 
-    def test_anchored_equals_global(self, spark):
-        from text_dedup_spark.operators.suffix_dedup import (
-            suffix_array_dedup,
-            suffix_array_dedup_anchored,
-        )
-
+    def test_anchored_equals_global(self, spark, monkeypatch):
         texts = make_corpus(seed=8, n=150)
         # plant a chain: A~B share chunk1, B~C share chunk2 (transitive group)
         rng = np.random.RandomState(99)
@@ -94,47 +197,43 @@ class TestAnchoredGrouping:
         texts[40] = chunk1 + " middle filler words " + chunk2
         texts[90] = chunk2 + " " + texts[90]
 
-        df = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(texts)], ["__INDEX__", "text"]
-        )
-        global_res = suffix_array_dedup(df, length_threshold=100)
-        anchored_res = suffix_array_dedup_anchored(df, length_threshold=100)
-        g = {r["__INDEX__"]: r["text"] for r in global_res.docs.collect()}
-        a = {r["__INDEX__"]: r["text"] for r in anchored_res.docs.collect()}
+        df = to_df(spark, texts)
+        g, _ = rewritten(monkeypatch, df, ONE_GROUP, length_threshold=100)
+        a, _ = rewritten(monkeypatch, df, ANCHORED, length_threshold=100)
         assert g == a
         # chain members actually got rewritten
         assert len(a[40]) < len(texts[40])
 
-    def test_auto_dispatch_both_paths_equal(self, spark):
-        """suffix_array_dedup_auto picks global below the byte threshold and
-        anchored above it; forced either way the output is identical."""
-        from text_dedup_spark.operators.suffix_dedup import suffix_array_dedup_auto
-
+    def test_auto_dispatch_both_paths_equal(self, spark, monkeypatch):
+        """The size gate picks one group at or below it and anchored groups
+        above it (the plans show which ran); the output is identical."""
         texts = make_corpus(seed=21, n=80)
-        df = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(texts)], ["__INDEX__", "text"]
+        df = to_df(spark, texts)
+        total = text_bytes(df)
+        assert total <= sd._one_group_bytes()  # default gate: one group
+        default = suffix_array_dedup(df, length_threshold=100)
+        via_global, res_g = rewritten(monkeypatch, df, total, length_threshold=100)
+        via_anchored, res_a = rewritten(
+            monkeypatch, df, total - 1, length_threshold=100
         )
-        via_global = suffix_array_dedup_auto(
-            df, length_threshold=100, global_bytes_threshold=1 << 30
-        )
-        via_anchored = suffix_array_dedup_auto(
-            df, length_threshold=100, global_bytes_threshold=0
-        )
-        g = {r["__INDEX__"]: r["text"] for r in via_global.docs.collect()}
-        a = {r["__INDEX__"]: r["text"] for r in via_anchored.docs.collect()}
-        assert g == a
 
-    def test_byte_cap_splits_observably_with_locality_recall(self, spark):
+        def plan(res):
+            return res.docs._jdf.queryExecution().optimizedPlan().toString()
+
+        for res in (default, res_g):
+            assert "FlatMapGroupsInPandas" in plan(res)
+            assert "ArrowEvalPython" not in plan(res)
+        # anchored output is a local checkpoint of the grouped pass
+        assert "FlatMapGroupsInPandas" not in plan(res_a)
+        assert via_global == via_anchored
+
+    def test_byte_cap_splits_observably_with_locality_recall(self, spark, monkeypatch):
         """max_group_bytes splits an oversized group into min-anchor-range
         subgroups: the split is counted via Observation, and because real
         duplicate clusters share their minimum anchor, most removable bytes
-        survive the split (recall floor pinned)."""
-        import numpy as np
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        from text_dedup_spark.operators.suffix_dedup import suffix_array_dedup_anchored
-
+        survive the split (recall floor pinned). The corpus sits above the
+        cap and below the default gate, so the cap alone must send it to
+        the split grouping."""
         rng = np.random.RandomState(17)
         words = [f"w{i}" for i in range(400)]
 
@@ -150,25 +249,19 @@ class TestAnchoredGrouping:
             texts.append(template + " " + body)
         for i in range(0, 40, 2):
             texts[i + 1] = texts[i]  # exact duplicate pairs
-        df = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(texts)], ["__INDEX__", "text"]
-        )
+        df = to_df(spark, texts)
+        total = text_bytes(df)
+        assert 20_000 < total <= sd._one_group_bytes()
 
-        lossless = suffix_array_dedup_anchored(df, length_threshold=100)
-        l_removed = (
-            df.select(F.sum(F.length(F.encode("text", "utf-8")))).first()[0]
-            - lossless.docs.select(F.sum(F.length(F.encode("text", "utf-8")))).first()[0]
-        )
+        lossless, _ = rewritten(monkeypatch, df, ANCHORED, length_threshold=100)
+        l_removed = total - sum(len(t.encode("utf-8")) for t in lossless.values())
         assert l_removed > 0
 
         obs = Observation("sfx_cap_test")
-        capped = suffix_array_dedup_anchored(
+        capped = suffix_array_dedup(
             df, length_threshold=100, max_group_bytes=20_000, observation=obs
         )
-        c_removed = (
-            df.select(F.sum(F.length(F.encode("text", "utf-8")))).first()[0]
-            - capped.docs.select(F.sum(F.length(F.encode("text", "utf-8")))).first()[0]
-        )
+        c_removed = total - text_bytes(capped.docs)
         got = obs.get
         assert got["n_groups_split"] >= 1
         assert got["n_rows_in_split_groups"] >= 100
@@ -179,30 +272,25 @@ class TestAnchoredGrouping:
         # boundary overlap recovers straddling duplicates: the same cap with
         # the margin disabled must never remove MORE than the overlap run
         obs0 = Observation("sfx_cap_test_no_ov")
-        capped0 = suffix_array_dedup_anchored(
-            df,
-            length_threshold=100,
-            max_group_bytes=20_000,
-            split_overlap_bytes=0,
-            observation=obs0,
-        )
-        c0_removed = (
-            df.select(F.sum(F.length(F.encode("text", "utf-8")))).first()[0]
-            - capped0.docs.select(F.sum(F.length(F.encode("text", "utf-8")))).first()[0]
-        )
+        with monkeypatch.context() as m:
+            m.setattr(sd, "_overlap_bytes", lambda cap, threshold: 0)
+            capped0 = suffix_array_dedup(
+                df, length_threshold=100, max_group_bytes=20_000, observation=obs0
+            )
+        c0_removed = total - text_bytes(capped0.docs)
         assert obs0.get["n_overlap_rows"] == 0
         assert c_removed >= c0_removed, (c_removed, c0_removed)
 
     def test_winnowing_guarantee(self):
-        from text_dedup_spark.kernels.winnowing import winnow_anchors
+        from text_dedup_spark.kernels.winnowing import winnow_anchor_list
 
         rng = np.random.RandomState(1)
         shared = bytes(rng.randint(97, 123, size=120, dtype=np.int64).astype(np.uint8).tolist())
         for trial in range(10):
             pre = bytes(rng.randint(97, 123, size=rng.randint(0, 200), dtype=np.int64).astype(np.uint8).tolist())
             post = bytes(rng.randint(97, 123, size=rng.randint(0, 200), dtype=np.int64).astype(np.uint8).tolist())
-            a = winnow_anchors(pre + shared, 48, 100 - 48 + 1)
-            b = winnow_anchors(shared + post, 48, 100 - 48 + 1)
+            a = set(winnow_anchor_list(pre + shared, 48, 100 - 48 + 1))
+            b = set(winnow_anchor_list(shared + post, 48, 100 - 48 + 1))
             assert a & b, f"trial {trial}: 120-byte shared run selected no common anchor"
 
     def test_winnowing_kernel_forms(self):
@@ -235,8 +323,6 @@ class TestAnchoredGrouping:
             n = int(rng.randint(0, 4000))
             data = bytes(rng.randint(0, 256, size=n, dtype=np.int64).astype(np.uint8).tolist())
             for w, window in ((48, 53), (8, 5), (2, 1), (16, 200)):
-                got = wn.winnow_anchors(data, w, window)
                 want = ref_anchors(data, w, window)
-                assert got == want, (trial, n, w, window)
                 lst = wn.winnow_anchor_list(data, w, window)
                 assert lst == sorted(want), (trial, n, w, window)

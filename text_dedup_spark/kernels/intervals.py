@@ -3,7 +3,7 @@
 Reference: ``src/text_dedup/config/algorithms/suffix_array.py`` —
 ``merge_intervals`` (:20-113), ``restore`` (:115-188), ``restore_and_merge``
 (:190-241), ``clean_up`` (:260-290). The doctest golden values from those
-lines are pinned in ``tests/test_intervals.py``. Intervals are ``slice``
+lines are pinned in ``tests/test_kernels.py::TestIntervals``. Intervals are ``slice``
 objects, as in the reference.
 """
 

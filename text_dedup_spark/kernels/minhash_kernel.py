@@ -224,22 +224,6 @@ class MinHashKernel:
         masks = np.full(shape=self.num_perm, dtype=self.dtype, fill_value=self.max_hash)
         return [self.band_values(sig) for sig in self._batch_signatures(shingle_sets, masks)]
 
-    @property
-    def band_nbytes(self) -> int:
-        return self.rows * np.dtype(self.dtype).itemsize
-
-    def embed_batch_concat(self, shingle_sets: list[set[bytes]]) -> list[bytes]:
-        """One byteswapped signature blob per doc covering bands*rows values;
-        band i is bytes [i*band_nbytes, (i+1)*band_nbytes) — the JVM splits
-        with substring, avoiding per-band Python bytes objects and Arrow
-        list<binary> conversion cost."""
-        masks = np.full(shape=self.num_perm, dtype=self.dtype, fill_value=self.max_hash)
-        n_used = self.bands * self.rows
-        return [
-            bytes(sig[:n_used].byteswap().data)
-            for sig in self._batch_signatures(shingle_sets, masks)
-        ]
-
     def _native_args(self) -> dict | None:
         """Keyword arguments of the native band-key entry points, or None
         when this config (or this host) takes the spec path."""

@@ -114,8 +114,3 @@ def winnow_anchor_list(data: bytes, w: int, window: int) -> list[int]:
     if len(h) <= window:
         return [int(h.min())]
     return np.unique(_sliding_min(h, window)).tolist()
-
-
-def winnow_anchors(data: bytes, w: int, window: int) -> set[int]:
-    """Distinct selected anchor hashes (min per W-run of window hashes)."""
-    return set(winnow_anchor_list(data, w, window))

@@ -379,10 +379,10 @@ def run_pipeline(config: Config, spark: SparkSession | None = None) -> dict:
             flagged if config.output.skip_filtering else flagged.where(~F.col(DUPLICATE_COL))
         )
     elif algo.algorithm_name == "suffix_array":
-        from text_dedup_spark.operators.suffix_dedup import suffix_array_dedup_auto
+        from text_dedup_spark.operators.suffix_dedup import suffix_array_dedup
 
         def build_rewritten():
-            return suffix_array_dedup_auto(
+            return suffix_array_dedup(
                 docs,
                 text_col=algo.text_column,
                 length_threshold=algo.length_threshold,

@@ -6,9 +6,11 @@ exact-substring dedup at length_threshold=100 under each physical
 strategy, one fresh JVM per leg (idle-machine rule: run legs alone).
 
 Legs:
-  global    one-task global pass (suffix_array_dedup, num_buckets=1)
-  lossless  winnowing-anchored CC grouping, no caps (== global output)
-  capped    anchored + max_group_bytes=16MB min-anchor locality split
+  global    one-group pass (gate forced open via ONE_GROUP_BYTES)
+  lossless  winnowing-anchored CC grouping, no cap (gate forced shut;
+            == global output)
+  capped    max_group_bytes=16MB: the gate shuts at the cap, anchored
+            groups take the min-anchor locality split
 
 Reported per leg: wall seconds, bytes removed, retained ratio vs the
 lossless removal total (bounded-loss accounting for the capped leg).
@@ -47,11 +49,13 @@ df.count()
 t0 = time.time()
 leg = "{leg}"
 if leg == "global":
+    sd.ONE_GROUP_BYTES = 1 << 62
     res = sd.suffix_array_dedup(df, id_col="doc_id", length_threshold=100)
 elif leg == "lossless":
-    res = sd.suffix_array_dedup_anchored(df, id_col="doc_id", length_threshold=100)
+    sd.ONE_GROUP_BYTES = 0
+    res = sd.suffix_array_dedup(df, id_col="doc_id", length_threshold=100)
 elif leg == "capped":
-    res = sd.suffix_array_dedup_anchored(
+    res = sd.suffix_array_dedup(
         df, id_col="doc_id", length_threshold=100, max_group_bytes=16 << 20)
 else:
     raise SystemExit(f"unknown leg {{leg!r}}")
