@@ -139,6 +139,32 @@ class TestStreamingDedup:
                 for r in incremental_minhash_batch(spark, df2, kernel, store).collect()}
         assert out2 == {12: 10}
 
+    def test_fingerprint_udf_runs_once_per_batch(self, spark, tmp_path):
+        """Every doc of a micro-batch goes through the bands UDF exactly
+        once: the store appends and the returned assignment reuse the
+        fingerprint cache. Counted in the kernel itself, on the workers."""
+        from text_dedup_spark.kernels.minhash_kernel import MinHashKernel
+        from text_dedup_spark.streaming.dedup_stream import incremental_minhash_batch
+
+        class CountingKernel(MinHashKernel):
+            def band_keys_batch(self, contents):
+                self.docs_seen.add(len(contents))
+                return super().band_keys_batch(contents)
+
+        kernel = CountingKernel(num_perm=32, ngram_size=2, min_length=3, threshold=0.5)
+        kernel.docs_seen = spark.sparkContext.accumulator(0)
+        base = "the quick brown fox jumps over the lazy dog again and again today"
+        # near-dups, uniques and a doc below min_length (null bands)
+        rows = [(i, f"{base} v{i % 3}" if i % 2 else f"doc {i} with its own words")
+                for i in range(24)] + [(24, "short")]
+        store = str(tmp_path / "bands_once")
+        for lo, hi in ((0, 12), (12, 25)):  # first batch, then one against the store
+            before = kernel.docs_seen.value
+            df = spark.createDataFrame(rows[lo:hi], "__INDEX__ long, text string").repartition(3)
+            out = incremental_minhash_batch(spark, df, kernel, store)
+            assert out.count() == hi - lo - (1 if hi == 25 else 0)
+            assert kernel.docs_seen.value - before == hi - lo
+
     def test_reconcile_heals_divergence_to_batch_exact(self, spark, tmp_path):
         """reconcile_band_store recovers EXACT batch clustering from the
         incremental store: intra-batch misses and cross-batch non-merges

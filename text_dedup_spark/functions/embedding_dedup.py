@@ -30,6 +30,13 @@ from pyspark.sql import functions as F
 
 from text_dedup_spark.functions.similarity import int_dot, quantize, sign_sketch_udf
 from text_dedup_spark.operators.connected_components import connected_components
+from text_dedup_spark.operators.guards import (
+    BUCKET_COUNTERS,
+    guard_hot_buckets,
+    observe_zero,
+)
+from text_dedup_spark.operators.ids import CLUSTER_COL, DUPLICATE_COL, INDEX_COL
+from text_dedup_spark.operators.minhash import assign_clusters
 
 
 def cosine_edges(
@@ -56,7 +63,8 @@ def cosine_edges(
     (sign-sketch candidates + exact confirm, linear task count), or "auto"
     (all_pairs at or below ``all_pairs_gate`` input rows, lsh above — the
     same explicit size-gated hybrid pattern as connected_components'
-    driver gate)."""
+    driver gate). ``observation`` holds ``n_buckets_dropped`` /
+    ``n_postings_dropped`` on either path (0 on all_pairs and uncapped)."""
     if candidate_mode not in ("auto", "all_pairs", "lsh"):
         raise ValueError(f"unknown candidate_mode {candidate_mode!r}")
     gate_cache = None
@@ -72,25 +80,7 @@ def cosine_edges(
             n_rows = gate_cache.count()
         candidate_mode = "all_pairs" if n_rows <= all_pairs_gate else "lsh"
     if candidate_mode == "lsh":
-        if gate_cache is not None:
-            # the LSH path re-persists its own sketch postings and (by
-            # default) checkpoints eagerly; the slim projection is consumed
-            # exactly once building them, so release it after the call
-            out = lsh_cosine_edges(
-                emb,
-                threshold,
-                id_col=id_col,
-                vec_col=vec_col,
-                scale=scale,
-                n_planes=n_planes,
-                n_tables=n_tables,
-                seed=seed,
-                max_bucket_size=max_bucket_size,
-                observation=observation,
-            )
-            gate_cache.unpersist()
-            return out
-        return lsh_cosine_edges(
+        out = lsh_cosine_edges(
             emb,
             threshold,
             id_col=id_col,
@@ -102,11 +92,18 @@ def cosine_edges(
             max_bucket_size=max_bucket_size,
             observation=observation,
         )
+        if gate_cache is not None:
+            # the LSH path re-persists its own sketch postings and (by
+            # default) checkpoints eagerly; the slim projection is consumed
+            # exactly once building them, so release it after the call
+            gate_cache.unpersist()
+        return out
     # all_pairs: the slim projection (when we built one) STAYS persisted — it
     # is at most all_pairs_gate rows by the gate decision and backs the two
-    # scans (L and R roles) of the lazy block-pair union
+    # scans (L and R roles) of the lazy block-pair union. No bucket guard
+    # runs here: its counters report 0.
     return _all_pairs_cosine_edges(
-        emb,
+        observe_zero(emb, observation, *BUCKET_COUNTERS),
         threshold,
         id_col=id_col,
         vec_col=vec_col,
@@ -143,12 +140,12 @@ def lsh_cosine_edges(
     true pair at cosine c is 1 - (1 - p^n_planes)^n_tables with
     p = 1 - acos(c)/pi — ~0.999+ for near-dup thresholds (>= 0.9) at the
     defaults; pinned >= 0.99 in tests. ``max_bucket_size`` caps hot buckets
-    observably (same contract as similarity.lsh_bucketed_topk)."""
+    observably (``operators.guards.guard_hot_buckets``)."""
     if dim is None:
         first = emb.select(vec_col).first()
         if first is None:
-            spark = emb.sparkSession
-            return spark.createDataFrame([], "src long, dst long")
+            empty = emb.sparkSession.createDataFrame([], "src long, dst long")
+            return observe_zero(empty, observation, *BUCKET_COUNTERS)
         dim = len(first[0])
     sketch = sign_sketch_udf(dim, n_planes, n_tables, seed)
     q = emb.select(
@@ -163,26 +160,9 @@ def lsh_cosine_edges(
     tagged = q.select(
         "vid", "q", "n2", F.posexplode_outer("sketches").alias("table_id", "bucket")
     ).persist()
-    if max_bucket_size is not None:
-        sizes = tagged.groupBy("table_id", "bucket").agg(
-            F.count(F.lit(1)).alias("__bsz__")
-        )
-        flagged = sizes.withColumn("__drop__", F.col("__bsz__") > max_bucket_size)
-        if observation is not None:
-            flagged = flagged.observe(
-                observation,
-                F.coalesce(F.sum(F.col("__drop__").cast("long")), F.lit(0)).alias(
-                    "n_buckets_dropped"
-                ),
-                F.coalesce(
-                    F.sum(F.when(F.col("__drop__"), F.col("__bsz__")).otherwise(0)),
-                    F.lit(0),
-                ).alias("n_postings_dropped"),
-            )
-        kept = flagged.where(~F.col("__drop__")).select("table_id", "bucket")
-        pruned = tagged.join(kept, ["table_id", "bucket"])
-    else:
-        pruned = tagged
+    pruned = guard_hot_buckets(
+        tagged, ["table_id", "bucket"], max_bucket_size, observation
+    )
     a = pruned.select(
         "table_id",
         "bucket",
@@ -358,14 +338,11 @@ def embedding_cosine_dedup(
         max_bucket_size=max_bucket_size,
         observation=observation,
     )
-    mapping = connected_components(edges)
-    m = mapping.select(F.col("id").alias(id_col), F.col("cluster").alias("__C__"))
-    return (
-        emb.select(id_col)
-        .join(m, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("__C__"), F.col(id_col)).alias("cluster_id"),
-            F.col("__C__").isNotNull().cast("int").alias("is_dup"),
-        )
+    assigned = assign_clusters(
+        emb.select(F.col(id_col).alias(INDEX_COL)), connected_components(edges)
+    )
+    return assigned.select(
+        F.col(INDEX_COL).alias(id_col),
+        F.col(CLUSTER_COL).alias("cluster_id"),
+        F.col(DUPLICATE_COL).cast("int").alias("is_dup"),
     )

@@ -17,6 +17,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from text_dedup_spark.operators.guards import drop_hot_keys, observe_zero
+
 
 def jaccard_pairs_prefix(
     grams_df: DataFrame,
@@ -44,7 +46,8 @@ def jaccard_pairs_prefix(
     FULL gram arrays), so capping can only lose candidate recall, never emit
     a false pair. Observable, never silent: pass a
     ``pyspark.sql.Observation`` to read ``n_hot_grams`` /
-    ``n_hot_postings`` after an action."""
+    ``n_hot_postings`` once this returns (both 0 without a cap;
+    ``operators.guards``)."""
     result, caches = _prefix_join(
         grams_df, threshold, id_col, grams_col, max_gram_df, observation
     )
@@ -104,23 +107,14 @@ def _prefix_join(
         F.col(id_col), F.col("sz"), F.explode("__hg__").alias("gram")
     )
     freq = postings.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
-    if max_gram_df is not None:
-        flagged = freq.withColumn("__hot__", F.col("df") > max_gram_df)
-        if observation is not None:
-            flagged = flagged.observe(
-                observation,
-                F.coalesce(F.sum(F.col("__hot__").cast("long")), F.lit(0)).alias(
-                    "n_hot_grams"
-                ),
-                F.coalesce(
-                    F.sum(F.when(F.col("__hot__"), F.col("df")).otherwise(0)),
-                    F.lit(0),
-                ).alias("n_hot_postings"),
-            )
+    names = ("n_hot_grams", "n_hot_postings")
+    if max_gram_df is None:
+        freq = observe_zero(freq, observation, *names)
+    else:
         # hot grams leave the index BEFORE prefix ranking: surviving grams
         # move up in rarest-first rank, so every doc still indexes a full
         # prefix of its remaining grams (maximal retained candidate power)
-        freq = flagged.where(~F.col("__hot__")).drop("__hot__")
+        freq = drop_hot_keys(freq, "df", max_gram_df, observation, *names)
     ranked = postings.join(freq, "gram").withColumn(
         "rn",
         F.row_number().over(

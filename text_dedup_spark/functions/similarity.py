@@ -17,6 +17,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from text_dedup_spark.operators.guards import guard_hot_buckets
+
 
 def quantize(vec: Column, scale: int = 1000) -> Column:
     return F.transform(vec, lambda x: F.round(x * scale).cast("long"))
@@ -26,18 +28,6 @@ def int_dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"), lambda acc, x: acc + x
     )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Float cosine (library use; not oracle-gated — float reduction order)."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x * y).cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    na = F.sqrt(F.aggregate(F.transform(a, lambda x: (x * x).cast("double")), F.lit(0.0), lambda s, x: s + x))
-    nb = F.sqrt(F.aggregate(F.transform(b, lambda x: (x * x).cast("double")), F.lit(0.0), lambda s, x: s + x))
-    return dot / (na * nb)
 
 
 def brute_force_topk(
@@ -63,30 +53,6 @@ def brute_force_topk(
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     rng = np.random.RandomState(seed)
     return rng.randn(n_planes, dim).tolist()
-
-
-def sign_sketch(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane bit sketch packed into a long (n_planes <= 63)."""
-    bits = [
-        F.when(
-            F.aggregate(
-                F.zip_with(
-                    vec,
-                    F.array(*[F.lit(float(w)) for w in plane]),
-                    lambda x, w: (x * w).cast("double"),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            >= 0,
-            F.lit(1).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-        for plane in planes
-    ]
-    out = F.lit(0).cast("long")
-    for i, b in enumerate(bits):
-        out = out + (b * F.lit(1 << i).cast("long"))
-    return out
 
 
 def sign_sketch_udf(dim: int, n_planes: int, n_tables: int, seed: int):
@@ -293,8 +259,9 @@ def lsh_bucketed_topk(
     within-bucket pair generation is quadratic) above ``max_bucket_size``
     are dropped from pair generation — observably, never silently: pass a
     ``pyspark.sql.Observation`` as ``observation`` to read
-    ``n_buckets_dropped`` / ``n_postings_dropped`` after an action. Recall
-    vs ``brute_force_topk`` is pinned in tests/test_similarity.py."""
+    ``n_buckets_dropped`` / ``n_postings_dropped`` after an action (both 0
+    without a cap; ``operators.guards``). Recall vs ``brute_force_topk`` is
+    pinned in tests/test_similarity.py."""
     q = emb.select(
         F.col(id_col).alias("vec_id"),
         quantize(F.col(vec_col)).alias("q"),
@@ -317,34 +284,9 @@ def lsh_bucketed_topk(
     tagged = sketched.select(
         "vec_id", "q", F.posexplode_outer("sketches").alias("table_id", "bucket")
     ).persist()
-    if max_bucket_size is not None:
-        sizes = tagged.groupBy("table_id", "bucket").agg(
-            F.count(F.lit(1)).alias("__bsz__")
-        )
-        flagged = sizes.withColumn("__drop__", F.col("__bsz__") > max_bucket_size)
-        if observation is not None:
-            flagged = flagged.observe(
-                observation,
-                F.coalesce(F.sum(F.col("__drop__").cast("long")), F.lit(0)).alias(
-                    "n_buckets_dropped"
-                ),
-                F.coalesce(
-                    F.sum(F.when(F.col("__drop__"), F.col("__bsz__")).otherwise(0)),
-                    F.lit(0),
-                ).alias("n_postings_dropped"),
-            )
-        kept = flagged.where(~F.col("__drop__")).select("table_id", "bucket")
-        pruned = tagged.join(kept, ["table_id", "bucket"])
-    elif observation is not None:
-        # uncapped but observed: report zero drops so callers can rely on
-        # the metrics existing either way
-        pruned = tagged.observe(
-            observation,
-            F.coalesce(F.sum(F.lit(0)), F.lit(0)).alias("n_buckets_dropped"),
-            F.coalesce(F.sum(F.lit(0)), F.lit(0)).alias("n_postings_dropped"),
-        )
-    else:
-        pruned = tagged
+    pruned = guard_hot_buckets(
+        tagged, ["table_id", "bucket"], max_bucket_size, observation
+    )
     a = pruned.select("table_id", "bucket", F.col("vec_id"), F.col("q").alias("qa"))
     b = pruned.select(
         "table_id",

@@ -32,17 +32,6 @@ def max_token_len(text: Column) -> Column:
     return F.array_max(F.transform(ws_tokens(text), lambda t: F.length(t)))
 
 
-def word_ngrams(text: Column, n: int) -> Column:
-    """Distinct space-joined word n-grams as an array<string>; empty array if
-    fewer than n tokens. DuckDB equivalent built in oracle SQL.
-
-    NOTE: evaluates ``split(text)`` inside the lambda — when the input is a
-    raw text column this can re-split per gram element. Prefer
-    ``word_ngrams_from_tokens`` over a materialized tokens column in hot
-    paths."""
-    return word_ngrams_from_tokens(ws_tokens(text), n)
-
-
 def word_ngrams_from_tokens(toks: Column, n: int) -> Column:
     grams = F.transform(
         F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1)),
@@ -71,10 +60,6 @@ def bpe_token_count(text: Column) -> Column:
 
 def digit_count(text: Column) -> Column:
     return F.length(text) - F.length(F.regexp_replace(text, "[0-9]", ""))
-
-
-def space_count(text: Column) -> Column:
-    return F.length(text) - F.length(F.regexp_replace(text, " ", ""))
 
 
 def marker_hits(text: Column, marker: str) -> Column:

@@ -26,11 +26,6 @@ def md5_digest(data: bytes, return_type: Literal["str", "bytes"] = "str") -> byt
     return h.hexdigest() if return_type == "str" else h.digest()
 
 
-def sha1_digest(data: bytes, return_type: Literal["str", "bytes"] = "str") -> bytes | str:
-    h = sha1(data, usedforsecurity=False)
-    return h.hexdigest() if return_type == "str" else h.digest()
-
-
 def sha256_digest(data: bytes, return_type: Literal["str", "bytes"] = "str") -> bytes | str:
     h = sha256(data, usedforsecurity=False)
     return h.hexdigest() if return_type == "str" else h.digest()

@@ -485,7 +485,3 @@ if _cxxhash is not None:  # pragma: no cover
 else:
     xxh3_64_intdigest = _xxh3_64_py
     xxh3_128_intdigest = _xxh3_128_py
-
-
-def xxh3_128_digest(data: bytes, seed: int = 0) -> bytes:
-    return xxh3_128_intdigest(data, seed).to_bytes(16, "big")

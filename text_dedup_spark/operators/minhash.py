@@ -41,6 +41,7 @@ from pyspark.sql.types import ArrayType, LongType
 from text_dedup_spark.kernels.minhash_kernel import MinHashKernel
 from text_dedup_spark.kernels.tokenization import shingles
 from text_dedup_spark.operators.connected_components import connected_components
+from text_dedup_spark.operators.guards import observe_zero
 from text_dedup_spark.operators.ids import CLUSTER_COL, DUPLICATE_COL, INDEX_COL
 
 
@@ -311,7 +312,7 @@ def _verify_clusters(
     min_length: int,
     threshold: float,
     regroup: Callable[[DataFrame, DataFrame, DataFrame | None], DataFrame],
-    bypass_observation: Observation | str,
+    observation: Observation | None,
     text_col: str = "text",
     max_cluster_verify: int | None = None,
     contraction: str = "window",
@@ -333,8 +334,8 @@ def _verify_clusters(
     verification and keep their assignment (a 10M-member exact-duplicate
     boilerplate cluster is ONE distinct text and never trips it; the cap
     bounds genuinely-distinct near-miss variety). Bypassed membership is
-    counted as ``n_bypassed`` on ``bypass_observation`` — never a silent
-    drop."""
+    counted as ``n_bypassed`` on ``observation`` (0 without a cap) — never
+    a silent drop."""
     cand = docs.where(F.col(DUPLICATE_COL)).select(INDEX_COL, text_col, CLUSTER_COL)
 
     # --- identical-text contraction (lossless) -------------------------
@@ -373,9 +374,10 @@ def _verify_clusters(
             F.col(INDEX_COL).alias("idx"), F.col(CLUSTER_COL)
         )
         # observable, never silent: readable post-action via Observation
-        bypassed = bypassed.observe(
-            bypass_observation, F.count(F.lit(1)).alias("n_bypassed")
-        )
+        if observation is not None:
+            bypassed = bypassed.observe(
+                observation, F.count(F.lit(1)).alias("n_bypassed")
+            )
         cand = cand_all.where(F.col("__csz__") <= max_cluster_verify).drop("__csz__")
 
     # one gram pass per rep, then JVM array_intersect Jaccard per pair —
@@ -400,6 +402,8 @@ def _verify_clusters(
     verified = pairs.where(jaccard_ge_expr(F.col("g1"), F.col("g2"), threshold))
 
     new_map = regroup(cand, verified, bypassed)
+    if bypassed is None:
+        new_map = observe_zero(new_map, observation, "n_bypassed")
     # materialize the verified mapping once (it is small — verified dup docs
     # only), then release the working caches: without this, the caller's
     # docs-action AND its clusters-action would each re-run the pair join
@@ -438,7 +442,7 @@ def check_false_positives(
     """Intra-cluster pairwise Jaccard re-check, re-assign min-idx within the
     *old* cluster (exact semantics of reference ``minhash.py:101-170`` —
     nodes failing verification revert to their own id). The shared core,
-    the ``max_cluster_verify`` cap and its ``fp_bypassed`` count are
+    the ``max_cluster_verify`` cap and its ``n_bypassed`` counter are
     ``_verify_clusters``'s.
 
     A text group is verified iff it has >=2 members or its rep verifies
@@ -495,7 +499,7 @@ def check_false_positives(
         kernel.min_length,
         kernel.threshold,
         regroup,
-        observation if observation is not None else "fp_bypassed",
+        observation,
         text_col,
         max_cluster_verify,
         contraction,
@@ -510,7 +514,6 @@ def minhash_dedup(
     check_false_positive: bool = False,
     skip_filtering: bool = False,
     repartition_input: int | None = None,
-    cc_driver_threshold: int = 5_000_000,
     max_cluster_verify: int | None = None,
     band_partitions: int | None = None,
     band_edges_mode: str = "window",
@@ -540,7 +543,10 @@ def minhash_dedup(
     salted groupBy-min + AQE-skew-split join-back, and the join-form
     FP-verify contraction: worst task bounded regardless of band heat).
     Cluster assignments are identical between modes (min is associative;
-    contraction preserves the transitive closure)."""
+    contraction preserves the transitive closure).
+
+    ``observation`` holds ``n_bypassed`` (the ``max_cluster_verify`` guard)
+    after an action; 0 without the cap or the verify."""
     if band_edges_mode not in ("window", "salted"):
         raise ValueError(
             f"band_edges_mode must be 'window' or 'salted', got {band_edges_mode!r}"
@@ -592,7 +598,7 @@ def minhash_dedup(
     edges = edges.observe(
         "minhash_edges", F.count(F.lit(1)).alias("n_edges")
     )
-    mapping = connected_components(edges, driver_threshold=cc_driver_threshold)
+    mapping = connected_components(edges)
 
     # min-length survivors rejoin their full columns by id (both sides carry
     # the repartition hash partitioning, so this adds no exchange of the
@@ -608,6 +614,8 @@ def minhash_dedup(
             observation=observation,
             contraction="join" if band_edges_mode == "salted" else "window",
         )
+    else:
+        assigned = observe_zero(assigned, observation, "n_bypassed")
 
     kept = (
         assigned

@@ -34,7 +34,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -46,8 +46,9 @@ from pyspark.sql.types import (
 
 from text_dedup_spark.kernels.simhash_kernel import SimHashKernel
 from text_dedup_spark.operators.connected_components import connected_components
+from text_dedup_spark.operators.guards import guard_hot_buckets
 from text_dedup_spark.operators.ids import CLUSTER_COL, DUPLICATE_COL, INDEX_COL
-from text_dedup_spark.operators.minhash import _verify_clusters
+from text_dedup_spark.operators.minhash import _verify_clusters, assign_clusters
 
 
 @dataclass
@@ -96,23 +97,6 @@ def simhash_embed(
     return df.withColumn("__E__", _embed_udf(kernel)(F.col(text_col)))
 
 
-def simhash_fingerprint(
-    df: DataFrame, kernel: SimHashKernel, text_col: str = "text"
-) -> DataFrame:
-    """-> (__INDEX__, __key__, sig_hi, sig_lo), one row per permutation table
-    (reference F9-F11, ``simhash.py:28-40`` + embed at config :328-380).
-    explode_outer: keys arrays are never empty (one entry per permutation),
-    and the non-outer Generate's inferred non-empty filter would double the
-    embed UDF evaluation when the input is not already cached."""
-    e = simhash_embed(df, kernel, text_col)
-    return e.select(
-        F.col(INDEX_COL),
-        F.col("__E__.sig_hi").alias("sig_hi"),
-        F.col("__E__.sig_lo").alias("sig_lo"),
-        F.explode_outer("__E__.keys").alias("__key__"),
-    )
-
-
 def simhash_edges(
     fingerprints: DataFrame,
     bit_diff: int,
@@ -128,27 +112,11 @@ def simhash_edges(
     is quadratic). Via ``simhash_dedup`` the input rows are one per DISTINCT
     signature (exact-duplicate cliques are contracted upstream), so the cap
     bounds distinct near-miss signatures per bucket — identical-boilerplate
-    floods never trigger it. Capping is observable, never silent: pass a
-    ``pyspark.sql.Observation`` to read ``n_buckets_dropped`` /
-    ``n_postings_dropped`` after an action."""
-    fp = fingerprints
-    if max_bucket_size is not None:
-        sizes = fp.groupBy("__key__").agg(F.count(F.lit(1)).alias("__bsz__"))
-        flagged = sizes.withColumn("__drop__", F.col("__bsz__") > max_bucket_size)
-        if observation is not None:
-            flagged = flagged.observe(
-                observation,
-                F.coalesce(F.sum(F.col("__drop__").cast("long")), F.lit(0)).alias(
-                    "n_buckets_dropped"
-                ),
-                F.coalesce(
-                    F.sum(F.when(F.col("__drop__"), F.col("__bsz__")).otherwise(0)),
-                    F.lit(0),
-                ).alias("n_postings_dropped"),
-            )
-        fp = fp.join(
-            flagged.where(~F.col("__drop__")).select("__key__"), "__key__"
-        )
+    floods never trigger it. Capping is observable, never silent: a
+    ``pyspark.sql.Observation`` passed as ``observation`` holds
+    ``n_buckets_dropped`` / ``n_postings_dropped`` after an action, both 0
+    without a cap (``operators.guards``)."""
+    fp = guard_hot_buckets(fingerprints, ["__key__"], max_bucket_size, observation)
     left = fp.select(
         F.col("__key__"),
         F.col(INDEX_COL).alias("id1"),
@@ -183,7 +151,7 @@ def simhash_check_false_positives(
 ) -> tuple[DataFrame, DataFrame]:
     """Intra-cluster pairwise Jaccard -> fresh CC over verified pairs
     (reference ``simhash.py:93-173``). The shared core, the
-    ``max_cluster_verify`` cap and its ``simhash_fp_bypassed`` count are
+    ``max_cluster_verify`` cap and its ``n_bypassed`` counter are
     ``minhash._verify_clusters``'s.
 
     The pair join runs over one representative per distinct text, so the
@@ -225,7 +193,7 @@ def simhash_check_false_positives(
         kernel.min_length,
         jaccard_threshold,
         regroup,
-        observation if observation is not None else "simhash_fp_bypassed",
+        observation,
         text_col,
         max_cluster_verify,
         contraction,
@@ -243,10 +211,19 @@ def simhash_dedup(
     max_bucket_size: int | None = None,
     max_cluster_verify: int | None = None,
     repartition_input: int | None = None,
-    cc_driver_threshold: int = 5_000_000,
     observation=None,
     contraction: str = "window",
 ) -> SimHashDedupResult:
+    """End-to-end SimHash dedup. ``df`` must already carry a unique long id
+    in ``id_col``.
+
+    ``observation`` holds ``n_buckets_dropped`` / ``n_postings_dropped``
+    (the ``max_bucket_size`` guard) and ``n_bypassed`` (the
+    ``max_cluster_verify`` guard) once an action has run on ``docs`` or
+    ``kept``; a counter is 0 when its guard is off or its path did not run.
+    Each guard observes an internal ``Observation``, which connected
+    components' and the verify's actions fill before this returns; the
+    caller's is attached once, with those values as literals, to ``docs``."""
     docs = df if id_col == INDEX_COL else df.withColumn(INDEX_COL, F.col(id_col))
     if repartition_input:
         docs = docs.repartition(repartition_input, F.col(INDEX_COL))
@@ -296,26 +273,29 @@ def simhash_dedup(
             F.explode_outer("__keys__").alias("__key__"),
         )
     )
-    bucket_edges = simhash_edges(fps, kernel.bit_diff, max_bucket_size, observation)
+    guard_obs = Observation() if observation is not None else None
+    bucket_edges = simhash_edges(fps, kernel.bit_diff, max_bucket_size, guard_obs)
     edges = member_edges.unionByName(bucket_edges)
-    mapping = connected_components(edges, driver_threshold=cc_driver_threshold)
-
-    m = mapping.select(F.col("id").alias(INDEX_COL), F.col("cluster").alias("__C__"))
-    assigned = (
-        docs.join(m, INDEX_COL, "left")
-        .withColumn(CLUSTER_COL, F.coalesce(F.col("__C__"), F.col(INDEX_COL)))
-        .withColumn(DUPLICATE_COL, F.col("__C__").isNotNull())
-        .drop("__C__")
-    )
+    mapping = connected_components(edges)
+    assigned = assign_clusters(docs, mapping)
+    counters = {"n_bypassed": 0}
     if check_false_positive:
+        verify_obs = Observation() if observation is not None else None
         assigned, mapping = simhash_check_false_positives(
             assigned,
             kernel,
             jaccard_threshold,
             text_col,
             max_cluster_verify=max_cluster_verify,
-            observation=observation,
+            observation=verify_obs,
             contraction=contraction,
+        )
+        if verify_obs is not None:
+            counters = verify_obs.get
+    if observation is not None:
+        counters = {**guard_obs.get, **counters}
+        assigned = assigned.observe(
+            observation, *[F.lit(v).cast("long").alias(k) for k, v in counters.items()]
         )
     # reference quirk: filter uses the INITIAL duplicate flag (simhash.py:176-186)
     kept = assigned if skip_filtering else assigned.where(~F.col(DUPLICATE_COL))

@@ -20,22 +20,27 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from text_dedup_spark.kernels.minhash_kernel import MinHashKernel
-from text_dedup_spark.operators.ids import INDEX_COL
-from text_dedup_spark.operators.minhash import _bands_udf, _explode_bands
+from text_dedup_spark.operators.ids import CLUSTER_COL, DUPLICATE_COL, INDEX_COL
+from text_dedup_spark.operators.minhash import (
+    _explode_bands,
+    assign_clusters,
+    fingerprint_bands,
+    lsh_star_edges_salted,
+)
 
 
-def _store_has_data(spark: SparkSession, band_store_dir: str) -> bool:
-    """True when the band store exists and holds at least one parquet part
-    — via the Hadoop FileSystem for the path's scheme (local, hdfs, s3a,
+def _count_store_files(spark: SparkSession, path: str) -> int:
+    """Parquet parts directly under ``path`` (0 when it does not exist) —
+    via the Hadoop FileSystem for the path's scheme (local, hdfs, s3a,
     ...), not the driver's local FS."""
     jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(band_store_dir)
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(jpath):
-        return False
-    glob = jvm.org.apache.hadoop.fs.Path(band_store_dir + "/*.parquet")
+        return 0
+    glob = jvm.org.apache.hadoop.fs.Path(path + "/*.parquet")
     statuses = fs.globStatus(glob)
-    return statuses is not None and len(statuses) > 0
+    return 0 if statuses is None else len(statuses)
 
 
 def _check_band_store_schema(store: DataFrame, band_store_dir: str) -> None:
@@ -81,17 +86,6 @@ def _index_dir(band_store_dir: str) -> str:
     so ``spark.read.parquet(band_store_dir)`` (the reconcile path and any
     pre-index reader) still sees exactly the postings log."""
     return band_store_dir.rstrip("/") + "/_band_index"
-
-
-def _count_store_files(spark: SparkSession, path: str) -> int:
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return 0
-    glob = jvm.org.apache.hadoop.fs.Path(path + "/*.parquet")
-    statuses = fs.globStatus(glob)
-    return 0 if statuses is None else len(statuses)
 
 
 def compact_band_index(spark: SparkSession, band_store_dir: str) -> None:
@@ -171,31 +165,30 @@ def incremental_minhash_batch(
       term). The broadcast is bounded by the micro-batch trigger size
       (docs x bands rows, ~20 B each); disable for pathologically large
       batches and the join falls back to a shuffled equi-join.
-    - *The fingerprint UDF runs once per batch, not twice*: the slim
-      (id, bands) projection is persisted and the returned assignment is
-      localCheckpoint'ed eagerly, so the store-append action and the
-      caller's action both reuse it instead of re-running the UDF.
+    - *The fingerprint UDF runs once per batch*: the batch goes through
+      ``minhash.fingerprint_bands``, whose cache sits below the null-band
+      filter (a filter below the persist is pushed under the UDF
+      projection and evaluates the UDF a second time), and the returned
+      assignment is localCheckpoint'ed eagerly, so the store appends and
+      the caller's action reuse the cache instead of re-running the UDF.
+      Pinned by a per-doc counter in
+      tests/test_streaming_multimodal.py::TestStreamingDedup.
     """
     src = batch_df if id_col == INDEX_COL else batch_df.withColumn(
         INDEX_COL, F.col(id_col)
     )
-    with_bands = (
-        src.select(F.col(INDEX_COL), F.col(text_col))
-        .withColumn("__BANDS__", _bands_udf(kernel)(F.col(text_col)))
-        .select(INDEX_COL, "__BANDS__")
-        .where(F.col("__BANDS__").isNotNull())
-        .persist()
-    )
+    cache = fingerprint_bands(src, kernel, text_col)
+    with_bands = cache.where(F.col("__BANDS__").isNotNull())
     bands = _explode_bands(with_bands, kernel)
     if id_col != INDEX_COL:
         bands = bands.withColumnRenamed(INDEX_COL, id_col)
     idx_dir = _index_dir(band_store_dir)
-    index_has_data = _store_has_data(spark, idx_dir)
+    index_has_data = _count_store_files(spark, idx_dir) > 0
     # explicit existence check (not a bare except: a corrupt store or a
     # wrong path must fail loudly, only a genuinely-first batch may skip).
     # Uses the Hadoop FileSystem API so hdfs://, s3a://, dbfs:/ stores work
     # the same as local paths.
-    store_has_data = _store_has_data(spark, band_store_dir)
+    store_has_data = _count_store_files(spark, band_store_dir) > 0
     if store_has_data and not index_has_data:
         # legacy store from a pre-index revision: bootstrap the index from
         # the postings log once (O(store), amortized over the stream)
@@ -235,7 +228,7 @@ def incremental_minhash_batch(
     bands.join(F.broadcast(assigned), id_col).groupBy(
         "__band_idx__", "__band_val__"
     ).agg(F.min("cluster_id").alias("cluster_id")).write.mode("append").parquet(idx_dir)
-    with_bands.unpersist()
+    cache.unpersist()
     if compact_index_over_files and (
         _count_store_files(spark, idx_dir) > compact_index_over_files
     ):
@@ -278,25 +271,12 @@ def reconcile_band_store(spark: SparkSession, band_store_dir: str) -> DataFrame:
             "store); re-ingest those batches before reconciling"
         )
     posts = store.select(
-        F.col("__doc_id__").alias("id"), "__band_idx__", "__band_val__"
+        F.col("__doc_id__").alias(INDEX_COL), "__band_idx__", "__band_val__"
     ).dropDuplicates()
-    roots = (
-        posts.groupBy("__band_idx__", "__band_val__")
-        .agg(F.min("id").alias("__root__"), F.count(F.lit(1)).alias("__cnt__"))
-        .where(F.col("__cnt__") > 1)
-    )
-    edges = (
-        posts.join(roots, ["__band_idx__", "__band_val__"])
-        .where(F.col("id") != F.col("__root__"))
-        .select(F.col("__root__").alias("src"), F.col("id").alias("dst"))
-    )
-    mapping = connected_components(edges)
-    ids = posts.select("id").distinct()
-    return (
-        ids.join(mapping, "id", "left")
-        .select(
-            F.col("id").alias("doc_id"),
-            F.coalesce(F.col("cluster"), F.col("id")).alias("exact_cluster_id"),
-            F.col("cluster").isNotNull().cast("int").alias("is_dup"),
-        )
+    mapping = connected_components(lsh_star_edges_salted(posts))
+    assigned = assign_clusters(posts.select(INDEX_COL).distinct(), mapping)
+    return assigned.select(
+        F.col(INDEX_COL).alias("doc_id"),
+        F.col(CLUSTER_COL).alias("exact_cluster_id"),
+        F.col(DUPLICATE_COL).cast("int").alias("is_dup"),
     )

@@ -3,6 +3,10 @@ entry on Spark at sf0.01 and compare against oracle_sql() via DuckDB —
 row count, column names, and an order-insensitive value hash (values
 normalized to strings, columns sorted by name).
 
+Each result line is flushed as soon as its query finishes and gives the
+Spark seconds and the DuckDB-oracle seconds separately (some oracles, e.g.
+the recursive-CTE replays, take minutes on their own).
+
 Usage: python tools/check_correctness.py [sf_dir]
 """
 
@@ -38,6 +42,10 @@ def table_hash(rows: list[tuple], cols: list[str]) -> str:
     return hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
 
 
+def say(line: str) -> None:
+    print(line, flush=True)
+
+
 def main(sf_dir: str) -> int:
     import __spark_entry__ as entry_mod
     from text_dedup_spark.session import get_spark
@@ -57,44 +65,46 @@ def main(sf_dir: str) -> int:
             cols = df.columns
             rows = [tuple(r) for r in df.collect()]
         except Exception as e:
-            print(f"FAIL  {name}: spark error: {e}")
+            say(f"FAIL  {name}: spark error: {e}")
             failures += 1
             continue
         dt = time.time() - t0
         if name not in oracles:
-            print(f"ROWS  {name}: {len(rows)} rows, cols={cols} ({dt:.1f}s) [no oracle]")
+            say(f"ROWS  {name}: {len(rows)} rows, cols={cols} (spark {dt:.1f}s) [no oracle]")
             if len(rows) == 0:
-                print(f"WARN  {name}: zero rows")
+                say(f"WARN  {name}: zero rows")
             continue
+        t0 = time.time()
         try:
             res = con.execute(oracles[name])
             ocols = [d[0] for d in res.description]
             orows = res.fetchall()
         except Exception as e:
-            print(f"FAIL  {name}: duckdb error: {e}")
+            say(f"FAIL  {name}: duckdb error: {e}")
             failures += 1
             continue
+        dq = time.time() - t0
         ok_count = len(rows) == len(orows)
         ok_cols = sorted(cols) == sorted(ocols)
         ok_hash = ok_cols and table_hash(rows, cols) == table_hash(orows, ocols)
         status = "OK   " if (ok_count and ok_cols and ok_hash) else "FAIL "
         if status.startswith("FAIL"):
             failures += 1
-        print(
+        say(
             f"{status} {name}: spark={len(rows)} duck={len(orows)} "
-            f"cols_match={ok_cols} hash_match={ok_hash} ({dt:.1f}s)"
+            f"cols_match={ok_cols} hash_match={ok_hash} (spark {dt:.1f}s, duckdb {dq:.1f}s)"
         )
         if not ok_cols:
-            print(f"      spark cols: {sorted(cols)}\n      duck  cols: {sorted(ocols)}")
+            say(f"      spark cols: {sorted(cols)}\n      duck  cols: {sorted(ocols)}")
         if ok_cols and ok_count and not ok_hash:
             # show a few differing rows for debugging
             order = sorted(range(len(cols)), key=lambda i: cols[i])
             s_set = {tuple(norm_cell(r[i]) for i in order) for r in rows}
             oorder = sorted(range(len(ocols)), key=lambda i: ocols[i])
             o_set = {tuple(norm_cell(r[i]) for i in oorder) for r in orows}
-            print(f"      spark-only: {list(s_set - o_set)[:3]}")
-            print(f"      duck-only : {list(o_set - s_set)[:3]}")
-    print(f"\n{failures} failures / {len(queries)} queries")
+            say(f"      spark-only: {list(s_set - o_set)[:3]}")
+            say(f"      duck-only : {list(o_set - s_set)[:3]}")
+    say(f"\n{failures} failures / {len(queries)} queries")
     return 1 if failures else 0
 
 

@@ -47,22 +47,17 @@ def _minhash_salted_edges(spark, sf_dir):
     from text_dedup_spark.operators.minhash import (
         _explode_bands,
         contract_identical_fingerprints,
+        fingerprint_bands,
         lsh_star_edges_salted,
     )
 
-    from text_dedup_spark.operators.minhash import _bands_udf
-
     kernel = MinHashKernel(num_perm=64, ngram_size=2, min_length=5, threshold=0.5)
-    # mirror minhash_dedup's structure: ONE UDF evaluation persisted, every
+    # minhash_dedup's fingerprint cache: ONE UDF evaluation persisted, every
     # downstream branch scans the cache (InMemoryTableScan in the dump)
-    with_bands = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select(F.col("doc_id").alias("__INDEX__"), "text")
-        .withColumn("__BANDS__", _bands_udf(kernel)(F.col("text")))
-        .select("__INDEX__", "__BANDS__")
-        .persist()
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        F.col("doc_id").alias("__INDEX__"), "text"
     )
-    filtered = with_bands.where(F.col("__BANDS__").isNotNull())
+    filtered = fingerprint_bands(docs, kernel).where(F.col("__BANDS__").isNotNull())
     rep_rows, cedges = contract_identical_fingerprints(filtered)
     return lsh_star_edges_salted(_explode_bands(rep_rows, kernel)).unionByName(cedges)
 
